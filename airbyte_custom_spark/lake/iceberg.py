@@ -33,6 +33,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
+from airbyte_custom_spark.lake.table import local_frame, match_keys
 from airbyte_custom_spark.operators.dedupe import latest_per_key
 
 _META_COLS = ("_lsn", "_deleted")
@@ -218,22 +219,22 @@ class IcebergTable:
         """LakeTable.lookup dispatch twin.  Iceberg performs its own
         bucket-transform predicate pushdown (the layout is
         ``bucket(N, pk[0])``), so the key predicate alone prunes manifests
-        server-side — this method only has to EXPRESS it: an IN-list for
-        small single-column key sets (reaches Iceberg's partition + file
-        stats pruning), a broadcast left-semi join otherwise."""
+        server-side — this method only has to EXPRESS it, with the same
+        ``match_keys`` as LakeTable: an IN-list on the first key column
+        (reaches Iceberg's partition + file stats pruning), plus a
+        broadcast left-semi join against the local key relation for
+        composite or large key sets."""
         cols = list(columns or self.primary_key[:1])
         rows = [tuple(k) if isinstance(k, (tuple, list)) else (k,) for k in keys]
         df = self.read(include_meta=include_meta)
         if not rows:
             return df.limit(0)
-        if len(cols) == 1 and len(rows) <= 1024:
-            return df.filter(F.col(cols[0]).isin([r[0] for r in rows]))
         by_name = {f.name: f.dataType for f in self.schema().fields}
         key_schema = T.StructType(
             [T.StructField(c, by_name[c], False) for c in cols]
         )
-        keys_df = self.spark.createDataFrame(rows, key_schema)
-        return df.join(F.broadcast(keys_df), on=cols, how="left_semi")
+        keys_df = local_frame(self.spark, rows, key_schema)
+        return match_keys(df, keys_df, cols[0], sorted({r[0] for r in rows}))
 
     # --------------------------------------------------- snapshot lifecycle
 

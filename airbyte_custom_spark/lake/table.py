@@ -37,13 +37,15 @@ Design points mirroring Iceberg, chosen for 100-TB behavior:
   granularity — size ``num_buckets`` so that table_size/num_buckets ≈ a
   few GB).
 
-* **Merge = union + map-side-combining reduce, ONE shuffle total.**  The
-  source batch is unioned with the touched target rows and reduced with
-  groupBy(pk).max_by(row, (lsn, is_delete)) — partial aggregation on the
-  map side, no MERGE-cardinality failures, hot keys collapse before the
-  exchange (SURVEY.md §4 "dedup before merge").  The aggregation exchange
-  IS the file-layout exchange: bucket = pmod(murmur3(pk), num_buckets)
-  uses the exact hash HashPartitioning uses (seed 42), and the merge pins
+* **Merge = union + map-side top-1 reduce, ONE shuffle total.**  The
+  source batch is unioned with the touched target rows and reduced to the
+  greatest (lsn, is_delete) per pk by ``latest_per_key`` — a
+  row_number window whose WindowGroupLimit keeps the top row per key on
+  the map side, so there are no MERGE-cardinality failures and hot keys
+  collapse before the exchange (SURVEY.md §4 "dedup before merge").  The
+  reduce exchange IS the file-layout exchange: bucket =
+  pmod(murmur3(pk), num_buckets) uses the exact hash HashPartitioning
+  uses (seed 42), and the merge pins
   shuffle partitions to num_buckets × files_per_bucket, so reducer
   partition p holds exactly bucket p % num_buckets — the reduce output is
   already bucket-clustered and no post-reduce repartition is needed.
@@ -187,6 +189,56 @@ def _align_expr(col: F.Column, src_t: T.DataType, dst_t: T.DataType) -> F.Column
     return col.try_cast(dst_t)
 
 
+# Largest key set a lookup expresses as an IN-list predicate.
+_MAX_IN_LIST = 1024
+
+
+def local_frame(
+    spark: SparkSession, rows: list[tuple[Any, ...]], schema: T.StructType
+) -> DataFrame:
+    """``rows`` (tuples in ``schema`` field order) as a local relation.
+
+    Built from an Arrow table, the frame plans as a ``LocalTableScan``:
+    collecting from it runs on the driver with no job, and broadcasting it
+    starts no Python worker.  ``createDataFrame(list)`` instead
+    parallelises a Python RDD (``Scan ExistingRDD``) and every job over it
+    launches Python tasks.  The Arrow conversion accepts ``None`` in a
+    non-nullable field and a float for an int, so rows are checked with
+    PySpark's own type verifier first (same errors as the list path)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    verify = T._make_type_verifier(schema)
+    for r in rows:
+        verify(r)
+    names = schema.names
+    table = pa.Table.from_pylist(
+        [dict(zip(names, r)) for r in rows], schema=to_arrow_schema(schema)
+    )
+    return spark.createDataFrame(table, schema)
+
+
+def match_keys(
+    df: DataFrame, keys_df: DataFrame, lead: str, lead_vals: list[Any]
+) -> DataFrame:
+    """Rows of ``df`` whose key (the columns of ``keys_df``, a small local
+    relation) is one of ``keys_df``'s rows; ``lead_vals`` are the distinct
+    values of its ``lead`` column.
+
+    ``lead IN (lead_vals)`` reaches every parquet scan's PushedFilters
+    (row-group min/max pruning), also under a merge-on-read latest-per-key
+    window, which partitions by the key.  It alone is exact for a single
+    key column; composite keys, and more than ``_MAX_IN_LIST`` lead values
+    (no IN-list then), are made exact by a broadcast left-semi join
+    against ``keys_df``."""
+    small = len(lead_vals) <= _MAX_IN_LIST
+    if small:
+        df = df.filter(F.col(lead).isin(lead_vals))
+        if keys_df.columns == [lead]:
+            return df
+    return df.join(F.broadcast(keys_df), on=keys_df.columns, how="left_semi")
+
+
 class LakeTable:
     # ---------------------------------------------------------------- setup
 
@@ -219,7 +271,7 @@ class LakeTable:
         them — Iceberg v2 ``write.merge.mode`` semantics).
 
         ``bucket_keys`` defaults to the primary key: with bucket =
-        pmod(murmur3(pk), num_buckets), the merge's groupBy(pk) exchange is
+        pmod(murmur3(pk), num_buckets), the merge's per-pk reduce exchange is
         ALSO the layout exchange (see module docstring) — one shuffle per
         merge.  Pass an explicit prefix (e.g. ("conv_id",)) to co-locate
         conversations instead; merges then pay one extra layout exchange.
@@ -796,7 +848,7 @@ class LakeTable:
         """Read a file set, grouping by schema id (schema evolution)."""
         target = self.schema()
         if not files:
-            return self.spark.createDataFrame([], target)
+            return local_frame(self.spark, [], target)
         by_schema: dict[int, list[str]] = {}
         for fl in files:
             by_schema.setdefault(int(fl.get("schema_id", 0)), []).append(
@@ -912,22 +964,26 @@ class LakeTable:
         from the warehouse final table after T+D.  Prunes the manifest to
         the O(|keys|) buckets the keys hash into BEFORE Spark lists a
         single file (the Iceberg bucket-transform predicate-pushdown
-        analog): bucket ids are recomputed from the key literals with the
-        SAME pure expression the layout uses (``bucket_expr`` — a tiny
-        |keys|-row local job, so Python never re-implements Murmur3), then
-        the pruned scan is key-filtered.  Cost is O(touched buckets),
-        never O(table) — at a 100-TB table a single-conversation fetch
-        reads one bucket (~1/num_buckets of the data), and a bucket layout
-        keyed on ``("conv_id",)`` makes it one conversation-co-located
-        slice.
+        analog): the keys become a local relation (``local_frame``) and
+        their bucket ids are computed from it with the SAME pure
+        expression the layout uses (``bucket_expr``, so Python never
+        re-implements Murmur3) — evaluated on the driver, no job.  The
+        pruned scan is then key-filtered by ``match_keys``: a
+        leading-key IN-list pushed to every parquet scan, plus a broadcast
+        semi-join against the local relation for composite or large key
+        sets.  No Python worker runs.  Cost is O(touched buckets), never
+        O(table) — at a 100-TB table a single-conversation fetch reads one
+        bucket (~1/num_buckets of the data), and a bucket layout keyed on
+        ``("conv_id",)`` makes it one conversation-co-located slice.
 
         ``columns`` names what each entry of ``keys`` holds (scalars for
         one column, tuples for several); defaults to the table's
         bucket_keys.  It must cover every bucket key — otherwise the
         bucket is not computable and the caller should read()+filter.
-        MoR deltas fold exactly as in ``read()``: pruning happens on both
-        base and delta manifests, the per-key reduce only sees the pruned
-        buckets."""
+        Key values are checked against the column types (PySpark's type
+        verifier: no ``None``, no float for an int).  MoR deltas fold
+        exactly as in ``read()``: pruning happens on both base and delta
+        manifests, the per-key reduce only sees the pruned buckets."""
         cols = list(columns or self.snapshot["bucket_keys"])
         missing = [k for k in self.snapshot["bucket_keys"] if k not in cols]
         if missing:
@@ -937,18 +993,17 @@ class LakeTable:
                 "bucket pruning impossible; use read() with a filter"
             )
         if not keys:
-            return self.read(include_meta=include_meta).limit(0)
+            return self.read(include_meta=include_meta, buckets=[])
         rows = [tuple(k) if isinstance(k, (tuple, list)) else (k,) for k in keys]
         if any(len(r) != len(cols) for r in rows):
             raise ValueError(f"every key must have {len(cols)} values: {cols}")
-        schema = self.schema()
-        by_name = {f.name: f.dataType for f in schema.fields}
+        by_name = {f.name: f.dataType for f in self.schema().fields}
         key_schema = T.StructType(
             [T.StructField(c, by_name[c], False) for c in cols]
         )
-        keys_df = self.spark.createDataFrame(rows, key_schema)
-        # one LocalTableScan job, no exchange: dedupe driver-side (|keys| is
-        # driver-bounded by construction), never .distinct() a literal frame
+        keys_df = local_frame(self.spark, rows, key_schema)
+        # dedupe driver-side (|keys| is driver-bounded by construction),
+        # never .distinct() a literal frame
         buckets = sorted(
             {
                 r[0]
@@ -961,24 +1016,17 @@ class LakeTable:
         # (recorded at write time; tight ranges under sort_within_buckets):
         # a file whose [key_min, key_max] covers none of the looked-up
         # leading-key values provably holds no row for them
-        file_filter = None
         lead = self.snapshot["bucket_keys"][0]
-        if lead in cols:
-            lead_vals = sorted({r[cols.index(lead)] for r in rows})
+        lead_vals = sorted({r[cols.index(lead)] for r in rows})
 
-            def file_filter(e: dict[str, Any]) -> bool:
-                lo, hi = e.get("key_min"), e.get("key_max")
-                if lo is None or hi is None:
-                    return True  # no stats recorded — never prune blind
-                return any(lo <= v <= hi for v in lead_vals)
+        def file_filter(e: dict[str, Any]) -> bool:
+            lo, hi = e.get("key_min"), e.get("key_max")
+            if lo is None or hi is None:
+                return True  # no stats recorded — never prune blind
+            return any(lo <= v <= hi for v in lead_vals)
 
         df = self.read(include_meta=True, buckets=buckets, file_filter=file_filter)
-        if len(cols) == 1 and len(rows) <= 1024:
-            # small single-column key sets: an IN-list predicate reaches the
-            # parquet row-group stats (min/max pruning inside the bucket)
-            df = df.filter(F.col(cols[0]).isin([r[0] for r in rows]))
-        else:
-            df = df.join(F.broadcast(keys_df), on=cols, how="left_semi")
+        df = match_keys(df, keys_df, lead, lead_vals)
         if not include_meta:
             df = df.select(*self.payload_columns)
         return df
@@ -1520,7 +1568,7 @@ class LakeTable:
         """Apply a batch of CDC events (payload + lsn + op [+ _ab_cdc_*]).
 
         Pipeline: validate pk → prune to touched buckets → union with
-        touched target rows → ONE max_by-reduce per key over (lsn,
+        touched target rows → ONE latest-per-key reduce over (lsn,
         is_delete) (delete wins ties — T5; the reduce happens AFTER
         _finalize_rows computes _deleted, so an equal-lsn delete/upsert
         pair in the same batch resolves to the delete regardless of
@@ -1528,9 +1576,10 @@ class LakeTable:
         over untouched files + recording batch_id for exactly-once replay
         skip).
 
-        There is no separate pre-reduce: the merge's own groupBy(pk) IS the
-        latest-per-key reduction, with map-side partial aggregation (hot
-        keys collapse before the exchange), and when bucket_keys == the
+        There is no separate pre-reduce: the merge's own reduce
+        (``_merged_frame``: WindowGroupLimit top-1 per key on the map
+        side, so hot keys collapse before the exchange) IS the
+        latest-per-key reduction, and when bucket_keys == the
         primary key its exchange is hash-aligned with the file layout (see
         module docstring) so the whole merge shuffles exactly once.
 

@@ -287,8 +287,8 @@ class CdcIngestJob:
                 delete_col="_del",
                 salt_buckets=self.config.salt_buckets,
             ).drop("_del")
-        # no pre-reduce otherwise: merge's union+groupBy(max_by) IS the
-        # latest-per-key reduction, with map-side partial aggregation — a
+        # no pre-reduce otherwise: merge's union + latest_per_key IS the
+        # latest-per-key reduction, with a map-side top-1 per key — a
         # separate reduce would just add a full extra shuffle of the batch
         try:
             result = table.merge(

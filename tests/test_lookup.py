@@ -184,3 +184,108 @@ def test_compacted_files_stay_sorted_with_key_stats(spark, tmp_path):
             str(tmp_path / "t" / e["path"]), columns=["conv_id"]
         )["conv_id"].to_pylist()
         assert col == sorted(col), f"{e['path']} not sorted"
+
+
+# --------------------------------------------------------------------------
+# The lookup plan: a local key relation and a pushed leading-key predicate
+
+
+def _mk_mode(spark, tmp_path, mode, n=4000, n_convs=60, p_delete=0.05):
+    """Default-layout table (bucket_keys = pk = (conv_id, turn_idx)); under
+    ``"mor"`` the second half of the events sits in outstanding deltas."""
+    t = LakeTable.create(
+        spark, str(tmp_path / mode), TRANSCRIPT_SCHEMA, num_buckets=8,
+        write_mode=mode,
+    )
+    ev = change_events(spark, n, n_convs=n_convs, seed=7, p_delete=p_delete)
+    hi = ev.agg(F.max("lsn")).first()[0]
+    t.merge(ev.filter(F.col("lsn") <= hi // 2), batch_id=0, mode="cow")
+    t.merge(ev.filter(F.col("lsn") > hi // 2), batch_id=1)
+    assert bool(t.delta_refs) == (mode == "mor")
+    return t
+
+
+@pytest.mark.parametrize("mode,max_jobs", [("cow", 2), ("mor", 3)])
+def test_lookup_plan_is_jvm_only_and_pushed(spark, tmp_path, count_jobs, mode, max_jobs):
+    """One composite-key lookup runs no Python RDD: the key side is a
+    LocalTableScan (the bucket ids come from it with no job), the
+    leading-key predicate reaches every parquet scan, base and delta, and
+    the whole lookup launches at most ``max_jobs`` jobs (broadcast build +
+    result, plus the latest-per-key shuffle stage under MoR)."""
+    t = _mk_mode(spark, tmp_path, mode)
+    row = t.read().orderBy("conv_id", "turn_idx").first()
+    key = (row["conv_id"], row["turn_idx"])
+    out = {}
+
+    def run():
+        df = t.lookup([key])
+        out["rows"] = df.collect()
+        out["plan"] = df._jdf.queryExecution().executedPlan().toString()
+
+    jobs = count_jobs(run)
+    assert [(r["conv_id"], r["turn_idx"]) for r in out["rows"]] == [key]
+    plan = out["plan"]
+    assert "ExistingRDD" not in plan
+    assert "LocalTableScan" in plan and "LeftSemi" in plan
+    scans = [ln for ln in plan.splitlines() if "FileScan parquet" in ln]
+    assert len(scans) >= (2 if mode == "mor" else 1)
+    for ln in scans:
+        pushed = ln.split("PushedFilters: [", 1)[1].split("]", 1)[0]
+        assert f"EqualTo(conv_id,{key[0]})" in pushed, pushed
+    assert jobs <= max_jobs, f"{jobs} jobs for one {mode} lookup"
+
+
+@pytest.mark.parametrize("mode", ["cow", "mor"])
+@pytest.mark.parametrize("n_absent", [3, 1100])
+def test_lookup_matches_semi_join_of_read(spark, tmp_path, mode, n_absent):
+    """``lookup`` == ``read()`` left-semi-joined with the keys, for
+    duplicate, absent and tombstoned keys; 1100 absent keys (one
+    conversation each) take the key set past the 1024-value IN-list."""
+    t = _mk_mode(spark, tmp_path, mode, p_delete=0.2)
+    live = [
+        (r["conv_id"], r["turn_idx"])
+        for r in t.read().select("conv_id", "turn_idx")
+        .orderBy("conv_id", "turn_idx").limit(30).collect()
+    ]
+    dead = [
+        (r["conv_id"], r["turn_idx"])
+        for r in t.read(include_deleted=True, include_meta=True)
+        .filter("_deleted").select("conv_id", "turn_idx").limit(10).collect()
+    ]
+    assert dead, "fixture produced no tombstones"
+    absent = [(f"conv-absent-{i}", i) for i in range(n_absent)]
+    keys = live + live[:5] + dead + absent
+    keys_df = spark.createDataFrame(keys, "conv_id string, turn_idx int")
+    want = t.read().join(keys_df, on=["conv_id", "turn_idx"], how="left_semi")
+    got = t.lookup(keys).collect()
+    assert sorted(got) == sorted(want.collect())
+    assert len(got) == len(live)
+
+
+@pytest.mark.parametrize(
+    "key,err",
+    [
+        (("c", None), "FIELD_NOT_NULLABLE"),
+        (("c", "3"), "FIELD_DATA_TYPE_UNACCEPTABLE"),
+        (("c", 3.0), "FIELD_DATA_TYPE_UNACCEPTABLE"),
+    ],
+)
+def test_lookup_validates_key_values(spark, tmp_path, key, err):
+    from pyspark.errors import PySparkTypeError, PySparkValueError
+
+    t = _mk(spark, tmp_path)  # bucket_keys = (conv_id, turn_idx)
+    with pytest.raises((PySparkTypeError, PySparkValueError), match=err):
+        t.lookup([key])
+
+
+def test_empty_reads_run_no_job(spark, tmp_path, count_jobs):
+    """An empty file set (a new table, ``lookup([])``) reads as a local
+    relation: collecting it launches no job and no Python task."""
+    t = LakeTable.create(
+        spark, str(tmp_path / "t"), TRANSCRIPT_SCHEMA, num_buckets=8
+    )
+    assert count_jobs(lambda: t.read().collect()) == 0
+    t = _mk(spark, tmp_path / "full")
+    got = t.lookup([])
+    assert got.columns == t.read().columns
+    assert count_jobs(got.collect) == 0
