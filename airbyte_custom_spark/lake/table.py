@@ -80,6 +80,7 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import threading
 import time
 import uuid
 from collections.abc import Callable
@@ -191,6 +192,41 @@ def _align_expr(col: F.Column, src_t: T.DataType, dst_t: T.DataType) -> F.Column
 
 # Largest key set a lookup expresses as an IN-list predicate.
 _MAX_IN_LIST = 1024
+
+# Above this many paths, building a file-source relation lists them with a
+# Spark job of one task per path.  Held by ``read_parquet`` while it raises
+# the session value for one read.
+_LISTING_THRESHOLD = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+_LISTING_LOCK = threading.Lock()
+
+
+def read_parquet(
+    spark: SparkSession, schema: T.StructType, paths: list[str]
+) -> DataFrame:
+    """The parquet files ``paths`` read with ``schema``, listed on the
+    driver.
+
+    ``spark.read.parquet`` lists its paths when the frame is built.  Past
+    the session's listing threshold (default 32) it schedules a job of one
+    task per path to do so, although a path naming a file needs nothing
+    but one ``stat``.  So the read runs with the threshold raised to the
+    path count, under a module lock, and the session is put back as it
+    was afterwards (the prior value, or unset), also when the read
+    raises."""
+    reader = spark.read.schema(schema)
+    with _LISTING_LOCK:
+        prior = spark.conf.get(_LISTING_THRESHOLD)
+        if len(paths) <= int(prior):
+            return reader.parquet(*paths)
+        was_set = _LISTING_THRESHOLD in spark.conf.getAll
+        spark.conf.set(_LISTING_THRESHOLD, str(len(paths)))
+        try:
+            return reader.parquet(*paths)
+        finally:
+            if was_set:
+                spark.conf.set(_LISTING_THRESHOLD, prior)
+            else:
+                spark.conf.unset(_LISTING_THRESHOLD)
 
 
 def local_frame(
@@ -845,10 +881,18 @@ class LakeTable:
         return df.select(*cols)
 
     def _read_files(self, files: list[dict[str, Any]]) -> DataFrame:
-        """Read a file set, grouping by schema id (schema evolution)."""
+        """Read a file set, grouping by schema id (schema evolution).
+
+        The manifest names every file, and the table lives on the local
+        filesystem (``_write_data`` creates and walks its directories with
+        ``os``), so ``read_parquet`` checks each file with one driver-side
+        ``stat`` and no listing job runs, however many files a merge-on-read
+        fold names.  Files at the current schema are returned as read;
+        only older schema ids are projected onto it."""
         target = self.schema()
         if not files:
             return local_frame(self.spark, [], target)
+        cur = int(self.snapshot["current_schema_id"])
         by_schema: dict[int, list[str]] = {}
         for fl in files:
             by_schema.setdefault(int(fl.get("schema_id", 0)), []).append(
@@ -856,8 +900,8 @@ class LakeTable:
             )
         parts: list[DataFrame] = []
         for sid, paths in by_schema.items():
-            raw = self.spark.read.schema(self.schema(sid)).parquet(*paths)
-            parts.append(self._align(raw, target))
+            raw = read_parquet(self.spark, self.schema(sid), paths)
+            parts.append(raw if sid == cur else self._align(raw, target))
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p)
@@ -1557,7 +1601,6 @@ class LakeTable:
         batch_id: int | None = None,
         query_id: str = "default",
         extracted_at: datetime | None = None,
-        assume_reduced: bool = False,  # deprecated: merge always reduces
         lineage: list[dict[str, Any]] | None = None,
         validate_pk: bool = True,
         touched_buckets: list[int] | None = None,

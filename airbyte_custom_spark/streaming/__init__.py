@@ -3,7 +3,4 @@ from airbyte_custom_spark.streaming.liveness import (  # noqa: F401
     LivenessWatchdog,
     StalledStreamError,
 )
-from airbyte_custom_spark.streaming.metrics import (  # noqa: F401
-    BatchMetricsLog,
-    lineage_stats,
-)
+from airbyte_custom_spark.streaming.metrics import BatchMetricsLog  # noqa: F401

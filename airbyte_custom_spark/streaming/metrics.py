@@ -18,42 +18,6 @@ import json
 import os
 import time
 from dataclasses import dataclass, field
-from typing import Any
-
-from pyspark.sql import DataFrame, functions as F
-
-
-def lineage_stats(
-    batch_df: DataFrame,
-    partition_col: str = "source_partition",
-    lsn_col: str = "lsn",
-) -> list[dict[str, Any]]:
-    """Per-source-partition (count, min lsn, max lsn) for one micro-batch.
-
-    One extra aggregation job per batch; it is a map-side-combining groupBy
-    over ≤ a few hundred partitions, so its cost is a single pass with a
-    tiny shuffle."""
-    rows = (
-        batch_df.groupBy(partition_col)
-        .agg(
-            F.count(F.lit(1)).alias("events"),
-            F.min(lsn_col).alias("min_lsn"),
-            F.max(lsn_col).alias("max_lsn"),
-        )
-        .collect()
-    )
-    return sorted(
-        (
-            {
-                "source_partition": r[partition_col],
-                "events": r["events"],
-                "min_lsn": r["min_lsn"],
-                "max_lsn": r["max_lsn"],
-            }
-            for r in rows
-        ),
-        key=lambda d: (d["source_partition"] is None, d["source_partition"]),
-    )
 
 
 @dataclass

@@ -30,7 +30,7 @@ import time
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from airbyte_custom_spark.config import IngestConfig
-from airbyte_custom_spark.lake.table import LakeTable
+from airbyte_custom_spark.lake.table import LakeTable, read_parquet
 from airbyte_custom_spark.operators.dedupe import (
     NullPrimaryKeyError,
     salted_latest,
@@ -133,9 +133,10 @@ class CdcIngestJob:
         by EVERY downstream job (measured 2.7× slower for the pruned
         stats pass at 16M rows).  The source's own log
         (`<ckpt>/sources/0/<batchId>`, the replay source of truth) lists
-        the batch's exact files; re-reading them via ``spark.read.schema(
-        …).parquet`` restores pushdown, pruning, and vectorized decode for
-        the stats pass AND the merge input.  Falls back to ``batch_df``
+        the batch's exact files; re-reading them via ``read_parquet``
+        restores pushdown, pruning, and vectorized decode for the stats
+        pass AND the merge input, with no listing job however many files
+        the trigger took.  Falls back to ``batch_df``
         untouched when the log is absent (non-file sources)."""
         log_dir = os.path.join(self.checkpoint_dir, "sources", "0")
         lines: list[str] = []
@@ -156,7 +157,7 @@ class CdcIngestJob:
                 files.append(e["path"])
         if not files:
             return batch_df
-        return self.spark.read.schema(self._stream_schema()).parquet(*files)
+        return read_parquet(self.spark, self._stream_schema(), files)
 
     def _transform_batch(
         self, events: DataFrame, table: LakeTable, batch_id: int
@@ -1239,4 +1240,4 @@ def backfill(
     )
     if mode == "overwrite":
         return table.overwrite(events)
-    return table.merge(events, assume_reduced=False).version
+    return table.merge(events).version

@@ -11,7 +11,13 @@ trade-off per Iceberg v2 (the reference's IcebergConsumer.java:140-224
 writes CoW — this is the alternative strategy at high update rates).
 """
 
+import os
+import shutil
+import sys
+from concurrent.futures import ThreadPoolExecutor
+
 import pytest
+from pyspark.errors import AnalysisException
 
 from airbyte_custom_spark.lake.table import LakeTable
 from airbyte_custom_spark.schema import TRANSCRIPT_SCHEMA
@@ -255,3 +261,124 @@ def test_mor_streaming_delta_budget(spark, tmp_path):
         s["operation"] == "compact-deltas" for s in t.history()
     )
     assert_matches_replay(t.read(), events)
+
+
+LISTING_THRESHOLD = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+
+
+@pytest.fixture(scope="module")
+def many_deltas(spark, tmp_path_factory):
+    """A MoR table of 3 delta commits into 16 buckets: 48 delta files, past
+    the session's listing threshold of 32 paths."""
+    import pyspark.sql.functions as F
+
+    ev_df = change_events(spark, 3000, n_convs=200, seed=5).cache()
+    lo, hi = ev_df.agg(F.min("lsn"), F.max("lsn")).first()
+    step = (hi - lo) // 3 + 1
+    t = mor_table(spark, tmp_path_factory.mktemp("many"), num_buckets=16)
+    for i in range(3):
+        t.merge(
+            ev_df.filter(
+                (F.col("lsn") >= lo + i * step) & (F.col("lsn") < lo + (i + 1) * step)
+            ),
+            batch_id=i,
+        )
+    ev_df.unpersist()
+    assert len(t.delta_refs) == 3 and len(t.live_delta_files()) > 32
+    return t
+
+
+def test_mor_frame_build_launches_no_listing_job(many_deltas, count_jobs):
+    """Building a frame over more files than the listing threshold runs
+    no Spark job: the manifest names every file, so none is listed by a
+    job of one task per path."""
+    assert count_jobs(lambda: many_deltas.read()) == 0
+    assert count_jobs(lambda: many_deltas.read_since(0)) == 0
+
+
+def test_mor_read_restores_listing_threshold(spark, tmp_path, many_deltas):
+    """The session's listing threshold is as before after a read, after
+    8 concurrent reads from driver threads (more than the 4 local cores),
+    and after a read that raises."""
+    shutil.copytree(many_deltas.path, str(tmp_path / "copy"))
+    t = LakeTable.load(spark, str(tmp_path / "copy"))
+
+    def setting():
+        return spark.conf.get(LISTING_THRESHOLD), LISTING_THRESHOLD in spark.conf.getAll
+
+    # two frame sizes past the threshold, so unlocked threads would
+    # restore each other's raised values
+    part = list(range(12))
+    assert 32 < len(t.live_delta_files(set(part))) < len(t.live_delta_files())
+
+    def reads(i):
+        return [t.read(buckets=part if i % 2 else None) for _ in range(5)]
+
+    before = setting()
+    expected = [t.read().count(), t.read(buckets=part).count()]
+    assert setting() == before
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with ThreadPoolExecutor(8) as pool:
+            frames = list(pool.map(reads, range(8), timeout=300))
+    finally:
+        sys.setswitchinterval(interval)
+    assert [f[-1].count() for f in frames] == expected * 4
+    assert setting() == before
+    spark.conf.set(LISTING_THRESHOLD, "33")
+    try:
+        t.read()
+        assert setting() == ("33", True)
+    finally:
+        spark.conf.unset(LISTING_THRESHOLD)
+    os.remove(os.path.join(t.path, t.live_delta_files()[0]["path"]))
+    with pytest.raises(AnalysisException, match="PATH_NOT_FOUND"):
+        t.read()
+    assert setting() == before
+
+
+def test_mor_evolved_base_with_current_deltas_matches_compacted(spark, tmp_path):
+    """Base files at an old schema id fold with deltas at the current one
+    (read as written, no projection) to the same rows a compacted copy
+    of the table holds."""
+    import pyspark.sql.functions as F
+    import pyspark.sql.types as T
+
+    t = mor_table(spark, tmp_path)
+    base = [ev(i, "c", f"conv-{i % 5}", i % 3) for i in range(1, 16)]
+    t.merge(mk_events(spark, base), batch_id=0, mode="cow")
+    t.evolve_schema(
+        T.StructType(
+            list(TRANSCRIPT_SCHEMA.fields) + [T.StructField("model", T.StringType())]
+        )
+    )
+    for bid, batch in enumerate(
+        [
+            [ev(20, "u", "conv-1", 1, text="new"), ev(21, "c", "conv-9", 0)],
+            [ev(22, "d", "conv-2", 2), ev(23, "u", "conv-9", 0, text="again")],
+        ],
+        start=1,
+    ):
+        t.merge(
+            mk_events(spark, batch).withColumn("model", F.lit(f"m{bid}")),
+            batch_id=bid,
+        )
+    cur = t.snapshot["current_schema_id"]
+    assert cur != 0
+    assert {e.get("schema_id", 0) for e in t.live_files()} == {0}
+    assert {e.get("schema_id", 0) for e in t.live_delta_files()} == {cur}
+
+    shutil.copytree(t.path, str(tmp_path / "compacted"))
+    c = LakeTable.load(spark, str(tmp_path / "compacted"))
+    c.compact_deltas()
+    assert not c.delta_refs
+    for df_t, df_c in [
+        (t.read(), c.read()),
+        (t.read_since(0), c.read_since(0)),
+    ]:
+        assert df_t.columns == df_c.columns
+        assert sorted(map(tuple, df_t.collect())) == sorted(map(tuple, df_c.collect()))
+    got = {(r["conv_id"], r["turn_idx"]): r["model"] for r in t.read().collect()}
+    assert got[("conv-1", 1)] == "m1" and got[("conv-9", 0)] == "m2"
+    assert got[("conv-0", 0)] is None and ("conv-2", 2) not in got
