@@ -137,11 +137,9 @@ class IcebergTable:
         """The MERGE's source frame: latest-per-key reduce (delete-wins
         ties, T5) projected onto (payload…, _lsn, _deleted).
 
-        Uses ``latest_per_key`` — the WindowGroupLimit top-1 formulation —
-        NOT ``latest_by_reduce``: the max_by(struct) form plans as a
-        SortAggregate (two full sorts) that SCALE.md measured 2.1× slower
-        at 16M rows.  Both guarantee one row per key pre-MERGE, so the
-        Iceberg branch defaults to the proven-fast plan.  Split out from
+        Uses ``latest_per_key`` — the WindowGroupLimit top-1 formulation
+        the LakeTable merge also runs (``latest_by_reduce`` delegates to
+        it), which guarantees one row per key pre-MERGE.  Split out from
         ``merge`` so the plan is assertable without the Iceberg jar
         (tests/test_iceberg_dispatch.py)."""
         src = events_df.withColumn(

@@ -26,16 +26,18 @@ from __future__ import annotations
 import json
 import os
 import time
+from concurrent.futures import ThreadPoolExecutor
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark import StorageLevel
+from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from airbyte_custom_spark.config import IngestConfig
-from airbyte_custom_spark.lake.table import LakeTable, read_parquet
+from airbyte_custom_spark.lake.table import LakeTable, MergeResult, read_parquet
 from airbyte_custom_spark.operators.dedupe import (
     NullPrimaryKeyError,
     salted_latest,
 )
-from airbyte_custom_spark.schema import CDC_EVENT_SCHEMA
+from airbyte_custom_spark.schema import CDC_EVENT_SCHEMA, JSON_CDC_EVENT_SCHEMA
 from airbyte_custom_spark.streaming.metrics import BatchMetrics, BatchMetricsLog
 
 
@@ -51,6 +53,9 @@ class CdcIngestJob:
     segments, offset tracking, replay on restart) and is what the sandbox
     can exercise.  Only the ``_source_stream`` method would change.
     """
+
+    # schema of the source's events; the JSON jobs read the raw envelope
+    _event_schema = CDC_EVENT_SCHEMA
 
     def __init__(
         self,
@@ -74,13 +79,6 @@ class CdcIngestJob:
         self.fail_after_batches: int | None = None
         self._batches_run = 0
         self._stream_id: str | None = None
-        # subclasses with an EXPENSIVE per-batch transform (JSON parse)
-        # set this: the transformed frame persists DISK_ONLY for the
-        # batch so the stats pass and the merge share ONE transform
-        # execution instead of re-parsing per job (deserialized memory
-        # caching measured slower than recompute on this VM; serialized
-        # disk blocks read back sub-second)
-        self._persist_transformed = False
 
     # ------------------------------------------------------------ source
 
@@ -121,7 +119,17 @@ class CdcIngestJob:
     # ------------------------------------------------------- batch apply
 
     def _stream_schema(self):
-        return CDC_EVENT_SCHEMA
+        return self._event_schema
+
+    def _targets(self, qid: str) -> list[tuple[str | None, str, str]]:
+        """(stream, table path, manifest query id) for each table the
+        batch feeds.  A single-table job is the one-stream case: stream
+        None, whose slice is the whole batch."""
+        return [(None, self.table_path, qid)]
+
+    def _slice(self, events: DataFrame, stream: str | None) -> DataFrame:
+        """The rows of the batch that ``stream``'s table applies."""
+        return events
 
     def _resolve_batch(self, batch_df: DataFrame, batch_id: int) -> DataFrame:
         """Swap the foreachBatch DataFrame for a REAL parquet scan of the
@@ -163,12 +171,13 @@ class CdcIngestJob:
         self, events: DataFrame, table: LakeTable, batch_id: int
     ) -> DataFrame:
         """Per-batch transform hook, applied before validation/stats/merge.
-        The base job ingests already-typed events; `JsonCdcIngestJob`
-        overrides this with the schema-inference + evolution + typed-cast
-        stage (and, when configured, the raw-envelope append keyed by
-        ``batch_id``).  A transform that attaches a hidden ``_acs_keys``
-        column gets it folded into the stats aggregation and fed back
-        through ``_post_discovery``."""
+        The base job ingests already-typed events; the JSON jobs
+        (`_JsonPayload`) override this with the schema-inference +
+        evolution + typed-cast stage (`JsonCdcIngestJob` adds, when
+        configured, the raw-envelope append keyed by ``batch_id``).  A
+        transform that attaches a hidden ``_acs_keys`` column gets it
+        folded into the stats aggregation and fed back through
+        ``_post_discovery``."""
         return events
 
     def _post_discovery(
@@ -180,15 +189,25 @@ class CdcIngestJob:
         return None
 
     def _apply_batch(self, batch_df: DataFrame, batch_id: int) -> None:
+        """Apply one micro-batch to every target table that has not
+        committed it yet, then record one ``BatchMetrics``.  Driver-side
+        manifest reads pick those tables BEFORE the data is touched, so a
+        fully-applied replay is free.  When more than one slice reads the
+        batch it persists once (DISK_ONLY — memory-deserialized caching
+        measured slower than recompute on this class of batch), so N
+        streams cost one source scan, not N."""
         start = time.monotonic()
         self._batches_run += 1
         if self.fail_after_batches is not None and self._batches_run > self.fail_after_batches:
             raise RuntimeError(f"injected failure before batch {batch_id}")
 
         # reload: each batch merges against the latest committed snapshot
-        table = LakeTable.load(self.spark, self.table_path)
-        qid = self._manifest_query_id()
-        if batch_id <= table.last_committed_batch(qid):
+        pending = []
+        for stream, path, qid in self._targets(self._manifest_query_id()):
+            table = LakeTable.load(self.spark, path)
+            if batch_id > table.last_committed_batch(qid):
+                pending.append((stream, table, qid))
+        if not pending:
             self.metrics.record(
                 BatchMetrics(batch_id=batch_id, events=0, seconds=0.0, skipped=True)
             )
@@ -197,15 +216,74 @@ class CdcIngestJob:
         events = self._resolve_batch(batch_df, batch_id)
         if self.target_lsn is not None:
             events = events.filter(F.col("lsn") <= F.lit(self.target_lsn))
+        persisted = None
+        if len(pending) > 1:
+            persisted = events = events.persist(StorageLevel.DISK_ONLY)
+        par = min(self.config.stream_parallelism, len(pending))
+
+        def apply(target):
+            stream, table, qid = target
+            return self._apply_table(
+                table, qid, self._slice(events, stream), batch_id, par > 1
+            )
+
+        try:
+            if par > 1:
+                # overlap independent per-stream pipelines: each targets
+                # its OWN table, so the merges are disjoint Spark jobs —
+                # concurrent driver threads keep the executor slots full
+                # while any one stream's small stages ramp up/down.
+                # Failure semantics match a sequential crash: already-
+                # committed streams skip on replay via their manifests.
+                with ThreadPoolExecutor(max_workers=par) as pool:
+                    # list() re-raises the first pk-fail / merge error
+                    applied = list(pool.map(apply, pending))
+            else:
+                applied = [apply(target) for target in pending]
+        finally:
+            if persisted is not None:
+                persisted.unpersist()
+        # C8 valve for merge-on-read tables: fold outstanding deltas once
+        # they exceed the configured budget — stats() is a snapshot-rollup
+        # read (zero file I/O), so the check costs nothing per batch.  It
+        # runs here, on the driver thread, because compact_deltas pins
+        # the session's shuffle confs
+        budget = self.config.mor_delta_budget
+        results = [result for result, _, _ in applied]
+        for (_, table, _), result in zip(pending, results):
+            if (
+                budget is not None
+                and not result.skipped
+                and table.stats().get("delta_files", 0) > budget
+            ):
+                table.compact_deltas()
+        self.metrics.record(
+            BatchMetrics(
+                batch_id=batch_id,
+                events=sum(n for _, n, _ in applied),
+                seconds=time.monotonic() - start,
+                skipped=all(r.skipped for r in results),
+                version=results[0].version if len(results) == 1 else None,
+                touched_buckets=sum(len(r.touched_buckets) for r in results),
+                ignored=sum(ignored for _, _, ignored in applied),
+            )
+        )
+
+    def _apply_table(
+        self,
+        table: LakeTable,
+        qid: str,
+        events: DataFrame,
+        batch_id: int,
+        concurrent: bool,
+    ) -> tuple[MergeResult, int, int]:
+        """One table's slice of the batch: transform → fused stats → pk
+        policy → lineage → [salt] → merge.  Returns (merge result, events applied,
+        rows ignored).  ``concurrent`` is set on pool threads, whose merge
+        must leave the session confs alone."""
         raw_events = events  # pre-transform, for fused-discovery rebuilds
         events = self._transform_batch(events, table, batch_id)
         discover = "_acs_keys" in events.columns
-        persisted = None
-        if self._persist_transformed:
-            from pyspark import StorageLevel
-
-            persisted = events.persist(StorageLevel.DISK_ONLY)
-            events = persisted
 
         # ONE metadata aggregation replaces three separate jobs (validate /
         # lineage / touched-buckets): group by (source_partition, bucket) —
@@ -247,11 +325,9 @@ class CdcIngestJob:
         if self.config.validate_pk:
             n_bad = sum(r["null_pk"] for r in stats)
             if n_bad > 0 and self.config.pk_violations == "fail":
-                if persisted is not None:
-                    persisted.unpersist()
                 raise NullPrimaryKeyError(
                     f"batch {batch_id} contains rows with NULL primary key "
-                    f"column(s) {table.primary_key}"
+                    f"column(s) {table.primary_key} for table {table.path}"
                 )
             if n_bad > 0:
                 # A3 ignore policy: drop the violating rows, count them
@@ -291,41 +367,21 @@ class CdcIngestJob:
         # no pre-reduce otherwise: merge's union + latest_per_key IS the
         # latest-per-key reduction, with a map-side top-1 per key — a
         # separate reduce would just add a full extra shuffle of the batch
-        try:
-            result = table.merge(
-                src,
-                batch_id=batch_id,
-                query_id=qid,
-                lineage=lineage,
-                validate_pk=False,  # validated via the stats aggregation above
-                touched_buckets=touched,
-            )
-        finally:
-            if persisted is not None:
-                persisted.unpersist()
-        # C8 valve for merge-on-read tables: fold outstanding deltas once
-        # they exceed the configured budget — stats() is a snapshot-rollup
-        # read (zero file I/O), so the check costs nothing per batch
-        budget = self.config.mor_delta_budget
-        if (
-            budget is not None
-            and not result.skipped
-            and table.stats().get("delta_files", 0) > budget
-        ):
-            table.compact_deltas()
-        elapsed = time.monotonic() - start
-        n = sum(r["events"] for r in stats) - ignored
-        self.metrics.record(
-            BatchMetrics(
-                batch_id=batch_id,
-                events=n,
-                seconds=elapsed,
-                skipped=result.skipped,
-                version=result.version,
-                touched_buckets=len(result.touched_buckets),
-                ignored=ignored,
-            )
+        result = table.merge(
+            src,
+            batch_id=batch_id,
+            query_id=qid,
+            lineage=lineage,
+            validate_pk=False,  # validated via the stats aggregation above
+            touched_buckets=touched,
+            # the pinned single-exchange plan sets session shuffle confs,
+            # which concurrent merges would clobber; the unpinned plan
+            # costs one extra exchange of already-reduced rows only
+            pin_exchange=not concurrent,
         )
+        if result.skipped:
+            return result, 0, 0
+        return result, sum(r["events"] for r in stats) - ignored, ignored
 
     # ----------------------------------------------------- offset validity
 
@@ -449,7 +505,29 @@ class CdcIngestJob:
         return self.metrics
 
 
-class JsonCdcIngestJob(CdcIngestJob):
+class _JsonPayload:
+    """The decode hook pair of both JSON jobs: typed extraction under the
+    table's CURRENT schema with the batch's exact payload key set folded
+    into the stats aggregation (`attach_discovery`), then evolution and a
+    rebuilt extraction only when the batch carried something new
+    (`evolve_from_tags`) — two payload parses per batch (stats, merge)
+    instead of three."""
+
+    _event_schema = JSON_CDC_EVENT_SCHEMA
+    payload_col: str
+
+    def _transform_batch(
+        self, events: DataFrame, table: LakeTable, batch_id: int
+    ) -> DataFrame:
+        return attach_discovery(events, table, self.payload_col)
+
+    def _post_discovery(
+        self, raw_events: DataFrame, table: LakeTable, tags: list[str]
+    ) -> DataFrame | None:
+        return evolve_from_tags(raw_events, table, tags, self.payload_col)
+
+
+class JsonCdcIngestJob(_JsonPayload, CdcIngestJob):
     """Raw-JSON-envelope CDC ingest: the source emits the CDC envelope
     (lsn/op/_ab_cdc_*/source_partition) plus ONE opaque ``payload`` JSON
     string — the reference's raw-table `_airbyte_data` column
@@ -457,8 +535,8 @@ class JsonCdcIngestJob(CdcIngestJob):
     micro-batch, before the normal validate→reduce→merge path:
 
       1. **Exact key discovery + Arrow-vectorized type inference**: the
-         batch's payload key set comes from a distributed ``map_keys``
-         aggregate (`operators/schema_evo.py::payload_keys` — exact, so a
+         batch's payload key set is tagged per row and folded into the
+         stats aggregation (`attach_discovery` — exact, so a
          late-appearing column can never lose values), while each new
          key's TYPE is inferred from a bounded Arrow-batched driver
          sample (`infer_payload_schema` — the north star's "vectorized
@@ -503,22 +581,8 @@ class JsonCdcIngestJob(CdcIngestJob):
         # different types at any time (`lake/raw.py::retype_from_raw`)
         self.raw_table_path = raw_table_path
         self.raw_num_buckets = raw_num_buckets
-        # A/B-measured OFF (4M events, local[8], 4 alternating reps:
-        # 12.99s uncached vs 13.24s cached): caching the typed frame
-        # saves the merge's re-parse but the DISK_ONLY write of
-        # full-width rows costs the same on this VM's single disk.  On a
-        # cluster with per-node NVMe or much heavier payloads the knob
-        # may win — flip per job after measuring.
-        self._persist_transformed = False
-
-    def _stream_schema(self):
-        from airbyte_custom_spark.schema import JSON_CDC_EVENT_SCHEMA
-
-        return JSON_CDC_EVENT_SCHEMA
 
     def _raw_table(self) -> LakeTable:
-        from pyspark.sql import types as T
-
         if LakeTable.exists(self.raw_table_path):
             return LakeTable.load(self.spark, self.raw_table_path)
         # payload columns = the full envelope minus lsn (lsn → _lsn meta);
@@ -552,27 +616,16 @@ class JsonCdcIngestJob(CdcIngestJob):
                 batch_id=batch_id,
                 query_id=f"{self._manifest_query_id()}/raw",
             )
-        # fused discovery (round-4 perf): extract under the CURRENT schema
-        # with the tag column riding along; the stats agg collects the
-        # exact key set and _post_discovery below evolves/rebuilds only
-        # when the batch actually carried something new — two payload
-        # parses per batch (stats, merge) instead of three
-        return attach_discovery(events, table, self.payload_col)
-
-    def _post_discovery(
-        self, raw_events: DataFrame, table: LakeTable, tags: list[str]
-    ) -> DataFrame | None:
-        return evolve_from_tags(raw_events, table, tags, self.payload_col)
+        return super()._transform_batch(events, table, batch_id)
 
 
 def infer_evolve_extract(
     events: DataFrame, table: LakeTable, payload_col: str = "payload"
 ) -> DataFrame:
-    """The JSON typing stage as ONE call (used by
-    `JsonGlobalStateIngestJob` per stream slice and `retype_from_raw`):
+    """The JSON typing stage as ONE call (used by `retype_from_raw`):
     exact key discovery → nested-aware inference → in-place evolution →
-    typed extraction with per-row error capture.  `JsonCdcIngestJob`
-    instead FUSES the discovery into the batch's stats aggregation
+    typed extraction with per-row error capture.  The ingest jobs instead
+    FUSE the discovery into the batch's stats aggregation
     (`attach_discovery` + `evolve_from_tags`) — one fewer payload parse
     per batch."""
     from airbyte_custom_spark.operators.schema_evo import (
@@ -597,8 +650,6 @@ def infer_evolve_extract(
 
 
 def _struct_cols(table: LakeTable) -> list[str]:
-    from pyspark.sql import types as T
-
     return sorted(
         f.name
         for f in table.schema().fields
@@ -608,8 +659,6 @@ def _struct_cols(table: LakeTable) -> list[str]:
 
 
 def _payload_target(table: LakeTable):
-    from pyspark.sql import types as T
-
     return T.StructType(
         [f for f in table.schema().fields if f.name in set(table.payload_columns)]
     )
@@ -692,8 +741,6 @@ def _resolve_and_evolve(
     outgrow it widens in place BEFORE extraction (E1/E2), so a
     mid-stream long→double value change never nulls a value into a cast
     error — detected on every row, not sampled."""
-    from pyspark.sql import types as T
-
     from airbyte_custom_spark.operators.schema_evo import (
         evolve_table_for,
         infer_payload_schema,
@@ -875,10 +922,11 @@ class GlobalStateIngestJob(CdcIngestJob):
 
     Spark mapping: one Structured-Streaming checkpoint (= the global
     offset) drives one foreachBatch that splits each micro-batch by the
-    stream discriminator column and merges each slice into its own
-    LakeTable under the SAME batch_id.  A crash between per-stream merges
-    replays the batch: streams already committed skip via their manifest,
-    the rest apply — exactly-once per stream from one global offset.
+    stream discriminator column and runs the single-table apply
+    (`_apply_table`) on each slice against its own LakeTable under the
+    SAME batch_id.  A crash between per-stream merges replays the batch:
+    streams already committed skip via their manifest, the rest apply —
+    exactly-once per stream from one global offset.
     """
 
     def __init__(
@@ -898,328 +946,40 @@ class GlobalStateIngestJob(CdcIngestJob):
         self.stream_col = stream_col
 
     def _stream_schema(self):
-        return T_STREAMED_EVENT
-
-    def _typed_input(self) -> bool:
-        """True when the source events carry typed pk columns (so pk
-        validation fuses into the global stats agg); the JSON variant
-        returns False and validates per typed slice instead."""
-        return True
-
-    def _transform_stream_batch(
-        self,
-        part: DataFrame,
-        table,
-        batch_id: int,
-        stream: str,
-        tags: list[str] | None = None,
-    ) -> DataFrame:
-        """Per-stream transform hook, applied to each stream's slice
-        before validation/merge (the JSON variant runs inference +
-        evolution + typed extraction here, against THAT stream's table).
-        ``tags`` carries the stream's exact payload key set when the
-        batch ran fused discovery (`_discovery_expr`)."""
-        return part
-
-    def _discovery_expr(self, pending: dict) -> F.Column | None:
-        """Optional per-row discovery-tag expression folded into the
-        global stats aggregation (None = no fused discovery).  The JSON
-        variant returns a stream-switched `tagged_key_expr`, which
-        replaces N per-slice discovery jobs with zero extra jobs."""
-        return None
-
-    def _apply_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        """Single-pass multi-stream apply (round-3 fix): the micro-batch is
-        persisted ONCE (DISK_ONLY — memory-deserialized caching measured
-        slower than recompute on this class of batch) and every per-stream
-        slice reads the cached copy, so N streams cost one source scan, not
-        N.  Validation, lineage, and per-stream row counts come from ONE
-        fused aggregation keyed by (stream, source_partition), mirroring
-        the single-stream path's stats fusion."""
-        self._batches_run += 1
-        if (
-            self.fail_after_batches is not None
-            and self._batches_run > self.fail_after_batches
-        ):
-            raise RuntimeError(f"injected failure before batch {batch_id}")
-        start = time.monotonic()
-        qid_base = self._manifest_query_id()
-        # driver-side manifest reads decide which streams still need this
-        # batch BEFORE touching the data — a fully-applied replay is free
-        pending: dict[str, tuple[LakeTable, str]] = {}
-        for stream, path in sorted(self.tables.items()):
-            table = LakeTable.load(self.spark, path)
-            qid = f"{qid_base}/{stream}"
-            if batch_id > table.last_committed_batch(qid):
-                pending[stream] = (table, qid)
-        if not pending:
-            self.metrics.record(
-                BatchMetrics(batch_id=batch_id, events=0, seconds=0.0, skipped=True)
-            )
-            return
-
-        from pyspark import StorageLevel
-
-        batch_df = self._resolve_batch(batch_df, batch_id)
-        disc = self._discovery_expr(pending)
-        if disc is not None:
-            # fused exact key discovery: the tag arrays are computed from
-            # the cached batch during the stats job — no extra scan, and
-            # the per-stream discovery jobs disappear entirely
-            batch_df = batch_df.withColumn("_acs_keys", disc)
-        batch_df.persist(StorageLevel.DISK_ONLY)
-        try:
-            # one null-pk flag per DISTINCT primary-key tuple across the
-            # pending streams (usually exactly one).  With an UNTYPED
-            # source (JsonGlobalStateIngestJob: pk columns live inside the
-            # JSON payload), pk validation moves to the per-stream typed
-            # slice below instead.
-            typed_input = self._typed_input()
-            pk_sets: dict[tuple[str, ...], int] = {}
-            aggs = [
-                F.count(F.lit(1)).alias("events"),
-                F.min("lsn").alias("min_lsn"),
-                F.max("lsn").alias("max_lsn"),
-            ]
-            if typed_input:
-                for table, _ in pending.values():
-                    pk_sets.setdefault(tuple(table.primary_key), len(pk_sets))
-                for pk, i in pk_sets.items():
-                    flag = F.lit(False)
-                    for k in pk:
-                        flag = flag | F.col(k).isNull()
-                    aggs.append(F.sum(flag.cast("int")).alias(f"null_pk_{i}"))
-            if disc is not None:
-                aggs.append(
-                    F.array_distinct(
-                        F.flatten(F.collect_set("_acs_keys"))
-                    ).alias("_keys")
-                )
-            stats = (
-                batch_df.groupBy(
-                    F.col(self.stream_col).alias("st"),
-                    F.col("source_partition").alias("sp"),
-                )
-                .agg(*aggs)
-                .collect()
-            )
-            total = 0
-            total_ignored = 0
-            par = min(self.config.stream_parallelism, len(pending))
-            if par > 1:
-                # overlap independent per-stream pipelines: each targets
-                # its OWN table, so the merges are disjoint Spark jobs —
-                # concurrent driver threads keep the executor slots full
-                # while any one stream's small stages ramp up/down.
-                # Failure semantics match a sequential crash: already-
-                # committed streams skip on replay via their manifests.
-                from concurrent.futures import ThreadPoolExecutor
-
-                with ThreadPoolExecutor(max_workers=par) as pool:
-                    futs = [
-                        pool.submit(
-                            self._apply_stream, stream, table, qid,
-                            batch_df, batch_id, stats, pk_sets, typed_input,
-                            pin_exchange=False,
-                        )
-                        for stream, (table, qid) in pending.items()
-                    ]
-                    # .result() re-raises the first pk-fail / merge error
-                    for fut in futs:
-                        n, ignored = fut.result()
-                        total += n
-                        total_ignored += ignored
-            else:
-                for stream, (table, qid) in pending.items():
-                    n, ignored = self._apply_stream(
-                        stream, table, qid, batch_df, batch_id, stats,
-                        pk_sets, typed_input,
-                    )
-                    total += n
-                    total_ignored += ignored
-        finally:
-            batch_df.unpersist()
-        self.metrics.record(
-            BatchMetrics(
-                batch_id=batch_id,
-                events=total,
-                seconds=time.monotonic() - start,
-                ignored=total_ignored,
-            )
+        # the event schema plus the stream discriminator (the Debezium
+        # topic/table name analog)
+        return T.StructType(
+            list(self._event_schema.fields)
+            + [T.StructField(self.stream_col, T.StringType(), True)]
         )
 
-    def _apply_stream(
-        self,
-        stream: str,
-        table: LakeTable,
-        qid: str,
-        batch_df: DataFrame,
-        batch_id: int,
-        stats: list,
-        pk_sets: dict[tuple[str, ...], int],
-        typed_input: bool,
-        pin_exchange: bool = True,
-    ) -> tuple[int, int]:
-        """One stream's slice → transform → validate → merge; returns
-        (events_applied, ignored).  Safe to run concurrently across
-        streams (disjoint tables, shared read-only cached batch)."""
-        srows = [r for r in stats if r["st"] == stream]
-        part = batch_df.filter(F.col(self.stream_col) == stream).drop(
-            self.stream_col, "_acs_keys"
+    def _targets(self, qid: str) -> list[tuple[str | None, str, str]]:
+        # one manifest query id per stream, so each commits exactly once
+        return [(s, p, f"{qid}/{s}") for s, p in sorted(self.tables.items())]
+
+    def _slice(self, events: DataFrame, stream: str | None) -> DataFrame:
+        return events.filter(F.col(self.stream_col) == stream).drop(
+            self.stream_col
         )
-        tags = None
-        if srows and "_keys" in srows[0].__fields__:
-            tags = sorted({t for r in srows for t in (r["_keys"] or [])})
-        part = self._transform_stream_batch(
-            part, table, batch_id, stream, tags=tags
-        )
-        pk_flag = F.lit(False)
-        for k in table.primary_key:
-            pk_flag = pk_flag | F.col(k).isNull()
-        if typed_input:
-            pk_idx = pk_sets[tuple(table.primary_key)]
-            n_bad = sum(r[f"null_pk_{pk_idx}"] for r in srows)
-        elif self.config.validate_pk:
-            # untyped source: count violations on the typed slice (the
-            # slice reads the cached batch, so this is one cheap pass,
-            # not a source rescan)
-            n_bad = part.filter(pk_flag).count()
-        else:
-            n_bad = 0
-        ignored = 0
-        if self.config.validate_pk and n_bad > 0:
-            if self.config.pk_violations == "fail":
-                raise NullPrimaryKeyError(
-                    f"batch {batch_id} stream {stream!r} contains rows "
-                    f"with NULL primary key column(s) {table.primary_key}"
-                )
-            ignored = n_bad
-        lineage = None
-        if self.config.record_lineage:
-            lineage = sorted(
-                (
-                    {
-                        "source_partition": r["sp"],
-                        "events": r["events"],
-                        "min_lsn": r["min_lsn"],
-                        "max_lsn": r["max_lsn"],
-                    }
-                    for r in srows
-                ),
-                key=lambda d: (
-                    d["source_partition"] is None,
-                    d["source_partition"],
-                ),
-            )
-        if ignored:
-            part = part.filter(~pk_flag)
-        result = table.merge(
-            part,
-            batch_id=batch_id,
-            query_id=qid,
-            lineage=lineage,
-            validate_pk=False,  # validated via the fused stats above
-            # concurrent threads must not touch session confs (the pinned
-            # single-exchange plan mutates shuffle.partitions); the
-            # unpinned plan costs one extra exchange of already-reduced
-            # rows only
-            pin_exchange=pin_exchange,
-        )
-        if result.skipped:
-            return 0, 0
-        return sum(r["events"] for r in srows) - ignored, ignored
 
 
-class JsonGlobalStateIngestJob(GlobalStateIngestJob):
+class JsonGlobalStateIngestJob(_JsonPayload, GlobalStateIngestJob):
     """GLOBAL-state CDC over raw-JSON envelopes: ONE WAL position carries
     MULTIPLE streams' records, each record's fields opaque in a
     ``payload`` JSON string (the realistic Debezium-server/CDC-topic
     shape: one replication slot, many tables, schemaless JSON values —
     `airbyte-protocol.md:485-506` + `typing-deduping.md:5-70`).
 
-    Per micro-batch: the batch persists ONCE; each pending stream's slice
-    runs the shared JSON typing stage (exact key discovery → nested-aware
-    inference → in-place evolution → typed extraction) against ITS OWN
-    table — streams evolve independently, a new column in one stream
-    never touches another's schema — then merges under the same global
-    batch_id.  pk validation happens on the typed slice (the envelope has
-    no pk columns); exactly-once per stream via per-stream manifests,
-    exactly like the typed parent."""
+    Each pending stream's slice runs the JSON typing stage (fused key
+    discovery → nested-aware inference → in-place evolution → typed
+    extraction) against ITS OWN table — streams evolve independently, a
+    new column in one stream never touches another's schema — then
+    merges under the same global batch_id; exactly-once per stream via
+    per-stream manifests, exactly like the typed parent."""
 
     def __init__(self, *args, payload_col: str = "payload", **kwargs):
         super().__init__(*args, **kwargs)
         self.payload_col = payload_col
-
-    def _stream_schema(self):
-        from pyspark.sql import types as T
-
-        from airbyte_custom_spark.schema import JSON_CDC_EVENT_SCHEMA
-
-        return T.StructType(
-            list(JSON_CDC_EVENT_SCHEMA.fields)
-            + [T.StructField(self.stream_col, T.StringType(), True)]
-        )
-
-    def _typed_input(self) -> bool:
-        return False
-
-    def _transform_stream_batch(
-        self,
-        part: DataFrame,
-        table,
-        batch_id: int,
-        stream: str,
-        tags: list[str] | None = None,
-    ) -> DataFrame:
-        if tags is None:  # direct (non-fused) invocation
-            return infer_evolve_extract(part, table, self.payload_col)
-        from airbyte_custom_spark.operators.schema_evo import (
-            decode_discovery_tags,
-        )
-        from airbyte_custom_spark.operators.typed import extract_payload
-
-        keys, nested_keys_raw, widen = decode_discovery_tags(tags)
-        full_map = _resolve_and_evolve(
-            table, keys, nested_keys_raw, part, self.payload_col, widen=widen
-        )
-        return extract_payload(
-            part, _payload_target(table), self.payload_col, key_map=full_map
-        )
-
-    def _discovery_expr(self, pending: dict) -> F.Column | None:
-        """Stream-switched `tagged_key_expr`: each pending stream's
-        branch tags its OWN table's struct columns (schemas evolve
-        independently).  CaseWhen evaluates only the matching branch per
-        row, so each row's payload parses once."""
-        from airbyte_custom_spark.operators.schema_evo import (
-            tagged_key_expr,
-            widen_probes_for,
-        )
-
-        out = None
-        for stream, (table, _qid) in sorted(pending.items()):
-            key_map = table.payload_key_map
-            raw_of = {col: raw for raw, col in key_map.items()}
-            expr = tagged_key_expr(
-                self.payload_col,
-                [raw_of.get(c, c) for c in _struct_cols(table)],
-                widen_probes_for(_payload_target(table), raw_of),
-            )
-            cond = F.col(self.stream_col) == stream
-            out = F.when(cond, expr) if out is None else out.when(cond, expr)
-        if out is None:
-            return None
-        return out.otherwise(F.array().cast("array<string>"))
-
-
-# streamed-event schema for GLOBAL-state sources: the CDC envelope plus the
-# stream discriminator (the Debezium topic/table name analog)
-from pyspark.sql import types as _T  # noqa: E402
-
-T_STREAMED_EVENT = _T.StructType(
-    list(CDC_EVENT_SCHEMA.fields)
-    + [_T.StructField("stream", _T.StringType(), True)]
-)
 
 
 def backfill(

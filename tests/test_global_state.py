@@ -475,3 +475,68 @@ def test_json_global_discovery_is_fused_no_per_stream_jobs(spark, tmp_path, monk
         assert f"x_{1-i}" not in t.payload_columns
         n_vals = t.read().filter(F.col(f"x_{i}").isNotNull()).count()
         assert n_vals > 0
+
+
+def test_typed_global_state_reads_custom_stream_col(spark, tmp_path):
+    """The typed job reads its source as the event schema plus
+    ``stream_col``, whatever that column is called."""
+    ev = change_events(spark, 2000, n_convs=40, max_turns=8, p_delete=0.1)
+    tagged = ev.withColumn(
+        "topic", F.when(F.col("lsn") % 2 == 0, "chats").otherwise("emails")
+    )
+    src = str(tmp_path / "wal")
+    write_event_chunks(tagged, src, n_chunks=2)
+    paths = {}
+    for s in ("chats", "emails"):
+        paths[s] = str(tmp_path / f"tbl_{s}")
+        LakeTable.create(spark, paths[s], TRANSCRIPT_SCHEMA, num_buckets=4)
+    job = GlobalStateIngestJob(
+        spark, paths, src, str(tmp_path / "ckpt"), IngestConfig(),
+        stream_col="topic",
+    )
+    job.run_available_now()
+    for s, p in paths.items():
+        expect = tagged.filter(F.col("topic") == s).drop("topic")
+        assert_matches_replay(LakeTable.load(spark, p).read(), expect)
+    assert job.metrics.total_events == tagged.count()
+
+
+@pytest.mark.parametrize("parallelism", [1, 2])
+def test_global_state_honours_mor_delta_budget(spark, tmp_path, parallelism):
+    """The C8 valve runs per stream table on the global path too: with a
+    budget of one delta, no merge-on-read stream table ends with more
+    than one outstanding delta, the fold keeps the replay state, and the
+    valve (which pins shuffle confs) leaves the session confs as they
+    were, also when the merges run on pool threads."""
+    ev = change_events(spark, 3000, n_convs=60, max_turns=8, p_delete=0.1)
+    tagged = ev.withColumn(
+        "stream", F.when(F.col("lsn") % 2 == 0, "chats").otherwise("emails")
+    )
+    src = str(tmp_path / "wal")
+    write_event_chunks(tagged, src, n_chunks=4)
+    paths = {}
+    for s in ("chats", "emails"):
+        paths[s] = str(tmp_path / f"tbl_{s}")
+        LakeTable.create(
+            spark, paths[s], TRANSCRIPT_SCHEMA, num_buckets=4, write_mode="mor"
+        )
+    keys = (
+        "spark.sql.shuffle.partitions",
+        "spark.sql.adaptive.coalescePartitions.enabled",
+    )
+    before = {k: spark.conf.get(k) for k in keys}
+    GlobalStateIngestJob(
+        spark, paths, src, str(tmp_path / "ckpt"),
+        IngestConfig(
+            mor_delta_budget=1,
+            max_files_per_trigger=1,
+            stream_parallelism=parallelism,
+        ),
+    ).run_available_now()
+    assert {k: spark.conf.get(k) for k in keys} == before
+    for s, p in paths.items():
+        t = LakeTable.load(spark, p)
+        assert t.stats()["delta_files"] <= 1, s
+        assert any(h["operation"] == "compact-deltas" for h in t.history()), s
+        expect = tagged.filter(F.col("stream") == s).drop("stream")
+        assert_matches_replay(t.read(), expect)

@@ -256,3 +256,38 @@ def test_target_lsn_checkpoint_is_terminal(spark, tmp_path):
         spark, table.path, src, str(tmp_path / "ckpt2"), IngestConfig()
     ).run_available_now()
     assert_matches_replay(LakeTable.load(spark, table.path).read(), events)
+
+
+def test_single_table_apply_job_counts(spark, tmp_path, count_jobs):
+    """Job-count guard for the single-table micro-batch apply: one batch
+    launches 4 Spark jobs on a typed copy-on-write table and 5 on a JSON
+    merge-on-read table whose batch adds a column (the counts measured
+    before single-table ingest became the one-stream case of the shared
+    apply)."""
+    from pyspark.sql import types as T
+
+    from airbyte_custom_spark.schema import CDC_EVENT_SCHEMA, JSON_CDC_EVENT_SCHEMA
+    from airbyte_custom_spark.sources.generator import json_envelope
+    from airbyte_custom_spark.streaming.pipeline import JsonCdcIngestJob
+
+    events = change_events(spark, 2000, n_convs=40, max_turns=8, p_delete=0.1)
+    typed_src = str(tmp_path / "typed")
+    events.write.parquet(typed_src)
+    cow = LakeTable.create(spark, str(tmp_path / "cow"), TRANSCRIPT_SCHEMA, num_buckets=4)
+    job = CdcIngestJob(spark, cow.path, typed_src, str(tmp_path / "ck_cow"))
+    frame = spark.read.schema(CDC_EVENT_SCHEMA).parquet(typed_src)
+    assert count_jobs(lambda: job._apply_batch(frame, 0)) == 4
+    assert_matches_replay(LakeTable.load(spark, cow.path).read(), events)
+
+    json_src = str(tmp_path / "json")
+    json_envelope(events).write.parquet(json_src)
+    narrow = T.StructType([f for f in TRANSCRIPT_SCHEMA.fields if f.name != "text"])
+    mor = LakeTable.create(
+        spark, str(tmp_path / "mor"), narrow, num_buckets=4, write_mode="mor"
+    )
+    jjob = JsonCdcIngestJob(spark, mor.path, json_src, str(tmp_path / "ck_mor"))
+    jframe = spark.read.schema(JSON_CDC_EVENT_SCHEMA).parquet(json_src)
+    assert count_jobs(lambda: jjob._apply_batch(jframe, 0)) == 5
+    t = LakeTable.load(spark, mor.path)
+    assert "text" in t.payload_columns
+    assert_matches_replay(t.read(), events)
