@@ -25,7 +25,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from airbyte_custom_spark.config import IngestConfig
 from airbyte_custom_spark.lake.table import LakeTable
-from airbyte_custom_spark.operators.dedupe import latest_by_reduce
+from airbyte_custom_spark.operators.dedupe import latest_per_key
 from airbyte_custom_spark.schema import TRANSCRIPT_SCHEMA
 from airbyte_custom_spark.sources.generator import (
     DERIVATION_SQL,
@@ -103,9 +103,9 @@ def q_cdc_flatten_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_cdc_latest_per_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T3 dedup: one row per (conv_id, turn_idx), greatest lsn — via the
-    map-side-combining reduce (not the window), checked against window SQL."""
+    map-side top-1 of latest_per_key, checked against the window SQL."""
     ev = events_from_table(spark, sf_dir)
-    latest = latest_by_reduce(ev, ("conv_id", "turn_idx"), order_col="lsn")
+    latest = latest_per_key(ev, ("conv_id", "turn_idx"), order_col="lsn")
     return latest.select("conv_id", "turn_idx", "lsn", "op", "text")
 
 
@@ -478,7 +478,7 @@ def _final_state_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     the cheap derivation for the analytics-layer queries below (the sink
     path itself is oracle-covered by cdc_final_state and friends)."""
     ev = events_from_table(spark, sf_dir)
-    latest = latest_by_reduce(ev, ("conv_id", "turn_idx"), order_col="lsn")
+    latest = latest_per_key(ev, ("conv_id", "turn_idx"), order_col="lsn")
     return latest.filter(F.col("op") != "d")
 
 

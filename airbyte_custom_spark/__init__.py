@@ -14,8 +14,8 @@ What this package provides:
                      generators (bounded + streaming file tail), chunked
                      snapshot scans, cursor scans.
   - ``operators``  : typed casting with per-row error capture, CDC metadata
-                     injection, latest-per-key reduction (window + map-side
-                     combine + salted two-stage), primary-key validation,
+                     injection, latest-per-key reduction (one window top-1
+                     with a map-side partial), primary-key validation,
                      name normalization, schema diff/evolution.
   - ``lake``       : a minimal snapshot-based lake table ("LakeTable") on
                      parquet — atomic versioned commits, bucketed

@@ -56,9 +56,6 @@ class IngestConfig:
     # bounds batch size like the reference's 10k-record queue bound
     # (`AirbyteDebeziumHandler.java:41-45`).
     max_files_per_trigger: int | None = None
-    # salt bucket count of the two-stage reduce for hot keys; salting is
-    # on when this is > 1
-    salt_buckets: int = 0
     # fail the batch if any pk column is null (`BigQuerySqlGenerator.java:391-416`)
     validate_pk: bool = True
     # what to do with pk-violating rows when validate_pk is on:

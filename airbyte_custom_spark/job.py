@@ -8,7 +8,7 @@ Usage (local or cluster; package shipped via --py-files):
   ... job_main.py init --table /data/tbl [--buckets 64]
   ... job_main.py backfill --table /data/tbl --snapshot /data/snap.parquet
   ... job_main.py tail --table /data/tbl --source /data/seg --checkpoint /data/ckpt
-        [--follow] [--target-lsn N] [--max-files N] [--salt N]
+        [--follow] [--target-lsn N] [--max-files N]
   ... job_main.py tail ... --json-payload [--raw-table /data/raw]
                                           # raw _airbyte_data JSON source
   ... job_main.py retype --raw-table /data/raw --out-table /data/tbl2 \
@@ -105,7 +105,6 @@ def main(argv: list[str] | None = None, stop_session: bool = True) -> int:
     t.add_argument("--follow", action="store_true", help="continuous; else availableNow")
     t.add_argument("--target-lsn", type=int, default=None)
     t.add_argument("--max-files", type=int, default=None)
-    t.add_argument("--salt", type=int, default=0)
     t.add_argument(
         "--json-payload", action="store_true",
         help="source events carry a raw JSON `payload` column "
@@ -425,7 +424,6 @@ def main(argv: list[str] | None = None, stop_session: bool = True) -> int:
         cfg = IngestConfig(
             query_id=args.query_id,
             max_files_per_trigger=args.max_files,
-            salt_buckets=args.salt,
             mor_delta_budget=args.mor_delta_budget,
         )
         job_cls = JsonCdcIngestJob if args.json_payload else CdcIngestJob

@@ -137,11 +137,10 @@ class IcebergTable:
         """The MERGE's source frame: latest-per-key reduce (delete-wins
         ties, T5) projected onto (payload…, _lsn, _deleted).
 
-        Uses ``latest_per_key`` — the WindowGroupLimit top-1 formulation
-        the LakeTable merge also runs (``latest_by_reduce`` delegates to
-        it), which guarantees one row per key pre-MERGE.  Split out from
-        ``merge`` so the plan is assertable without the Iceberg jar
-        (tests/test_iceberg_dispatch.py)."""
+        Uses ``latest_per_key`` — the WindowGroupLimit top-1 the LakeTable
+        merge also runs, which guarantees one row per key pre-MERGE.
+        Split out from ``merge`` so the plan is assertable without the
+        Iceberg jar (tests/test_iceberg_dispatch.py)."""
         src = events_df.withColumn(
             "_del",
             (F.col("op") == "d")

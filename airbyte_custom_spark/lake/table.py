@@ -92,7 +92,10 @@ from typing import Any
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
-from airbyte_custom_spark.operators.dedupe import validate_primary_keys
+from airbyte_custom_spark.operators.dedupe import (
+    latest_per_key,
+    validate_primary_keys,
+)
 # is_widening: recursive equal-or-widening rule, shared with the
 # schema-diff stage and the Iceberg branch (round 4: struct subfield adds /
 # array element widens evolve in place — see schema.py::is_widening)
@@ -936,8 +939,6 @@ class LakeTable:
             delta_files = [e for e in delta_files if file_filter(e)]
         df = self._read_files(base_files)
         if delta_files:
-            from airbyte_custom_spark.operators.dedupe import latest_per_key
-
             df = latest_per_key(
                 df.unionByName(self._read_files(delta_files)),
                 self.primary_key,
@@ -983,8 +984,6 @@ class LakeTable:
         if deltas:
             df = df.unionByName(self._read_files(deltas))
         if self.delta_refs:
-            from airbyte_custom_spark.operators.dedupe import latest_per_key
-
             df = latest_per_key(
                 df, self.primary_key, order_col="_lsn", delete_col="_deleted"
             )
@@ -1797,8 +1796,6 @@ class LakeTable:
         16M rows), exactly one shuffle in its plan, output partitioning =
         hash(_gk, pk) which IS the bucket layout (asserted by
         tests/test_plans.py)."""
-        from airbyte_custom_spark.operators.dedupe import latest_per_key
-
         return latest_per_key(
             tgt.unionByName(rows),
             self.primary_key,
@@ -1836,8 +1833,6 @@ class LakeTable:
             return MergeResult(version=None, skipped=True)
         if validate_pk:
             validate_primary_keys(events_df, self.primary_key)
-        from airbyte_custom_spark.operators.dedupe import latest_per_key
-
         rows = self._finalize_rows(events_df, extracted_at, defer_ids=True)
         pk = self.primary_key
         aligned = pin_exchange and list(self.snapshot["bucket_keys"]) == list(pk)
@@ -1883,8 +1878,6 @@ class LakeTable:
         maintenance pair collapsed into one snapshot commit."""
         if not self.delta_refs:
             return None
-        from airbyte_custom_spark.operators.dedupe import latest_per_key
-
         touched = {b for ref in self.delta_refs for b in ref["live_buckets"]}
         keep = [
             r

@@ -1,8 +1,5 @@
 from airbyte_custom_spark.operators.dedupe import (  # noqa: F401
-    latest_by_reduce,
-    latest_by_window,
     latest_per_key,
-    salted_latest,
     validate_primary_keys,
     NullPrimaryKeyError,
 )

@@ -1,5 +1,5 @@
-"""Latest-per-key reduction, primary-key validation, salting — the upsert
-core (SURVEY.md §2.4).
+"""Latest-per-key reduction and primary-key validation — the upsert core
+(SURVEY.md §2.4).
 
 Reference semantics reproduced here:
   T1 validatePrimaryKeys — fail the sync if any new row has a NULL pk part
@@ -11,32 +11,30 @@ Reference semantics reproduced here:
      key; ties between a delete and a non-delete resolve to the delete
      (delete-wins, `BigQuerySqlGenerator.java:514-548`).
 
+``latest_per_key`` is the one operator for T3 + T5; every reader and writer
+(LakeTable merge/read/lookup, the Iceberg merge source, the queries) runs it.
+It orders rows by the struct (cursor, is_delete) descending: a NULL cursor
+sorts below any value (oldest, E4) and a delete beats an upsert at an equal
+cursor.  Exact ties otherwise keep one arbitrary row.
+
 Scale notes (100 TB / 1000 executors):
-  * ``latest_per_key`` is the hot path (used by LakeTable.merge): a
-    row_number()==1 window whose filter Spark rewrites into
-    WindowGroupLimit(Partial) BEFORE the exchange — each map task emits at
-    most ONE row per key, so a hot key with 10^7 updates ships ~num_tasks
-    rows, not 10^7 (the "reduce input to 1 row/key before MERGE" pattern,
-    SURVEY.md §4), and only one post-shuffle pass runs instead of the two
-    sorts a max_by(struct) SortAggregate costs (measured 2.1× faster at
-    16M rows).  Plan-asserted in tests/test_plans.py.
+  * The row_number()==1 filter plans as WindowGroupLimit(Partial) BEFORE
+    the exchange: each map task emits at most ONE row per key, so a hot
+    key with 10^7 updates ships ~num_tasks rows, not 10^7 (the "reduce
+    input to 1 row/key before MERGE" pattern, SURVEY.md §4), and one
+    post-shuffle pass runs instead of the two sorts a max_by(struct)
+    SortAggregate costs (measured 2.1× faster at 16M rows).  Plan-asserted
+    in tests/test_plans.py.
+  * Skew needs no salting: that map-side partial already collapses a hot
+    key before the exchange.  A two-stage salted reduce (salt, reduce,
+    reduce again) plans 2 exchanges and no WindowGroupLimit, and measured
+    1.8× slower on 4M events with a 10% or 50% hot key (SCALE.md §4).
   * All group/sort keys are PREFIXED with xxhash64(pk) (`_gk`): string pks
     like conv_id share long common prefixes ("conv-…"), so sort/compare
     falls through the 8-byte prefix on almost every comparison; a leading
     64-bit hash resolves virtually all comparisons on the first long
-    (measured 1.4-1.6× on both formulations).  The prefix is an internal
-    column — outputs are unchanged.
-  * ``latest_by_reduce`` (round 6) delegates to ``latest_per_key`` — the
-    window-limit form measured strictly faster and just as map-side-
-    collapsing.  The algebraic groupBy + max_by formulation survives as
-    ``latest_by_maxby`` for when an AggregateFunction is specifically
-    needed (its struct buffer plans as a SortAggregate).
-  * ``latest_by_window`` is the reference-faithful T3 form (row_number over
-    cursor DESC NULLS LAST) kept verbatim for parity testing.
-  * ``salted_latest`` shows the explicit two-stage salted repartition the
-    north rule asks for: stage 1 reduces (key, salt) groups, stage 2 reduces
-    keys — bounding any single reducer's input to ~rows/salt_buckets even
-    for operations without partial aggregation.
+    (measured 1.4-1.6×).  The prefix is an internal column — outputs are
+    unchanged.
 """
 
 from __future__ import annotations
@@ -103,100 +101,3 @@ def latest_per_key(
         .filter(F.col("_rn") == 1)
         .select(*cols)
     )
-
-
-def latest_by_reduce(
-    df: DataFrame,
-    keys: Sequence[str],
-    order_col: str = "lsn",
-    delete_col: str | None = None,
-) -> DataFrame:
-    """One row per key = the row with the greatest (order_col, is_delete).
-
-    Round 6: now the SAME physical formulation as ``latest_per_key``
-    (WindowGroupLimit map-side top-1 before the exchange).  The historical
-    groupBy + max_by form (kept below as ``latest_by_maxby``) plans as a
-    SortAggregate whose struct buffer pays TWO in-partition sorts; the
-    window-limit form collapses map-side just as well (at most one row
-    per key crosses the exchange — same hot-key defense) and measured
-    2.6× faster at 10M rows (bench_extra: 11.35s vs 4.42s, local[32]).
-    Identical output: greatest (order_col, is_delete) per key, columns
-    unchanged; both forms are arbitrary-but-single on exact ties."""
-    return latest_per_key(df, keys, order_col=order_col, delete_col=delete_col)
-
-
-def latest_by_maxby(
-    df: DataFrame,
-    keys: Sequence[str],
-    order_col: str = "lsn",
-    delete_col: str | None = None,
-) -> DataFrame:
-    """The algebraic-aggregate formulation (groupBy + max_by): map-side
-    partial aggregation via an AggregateFunction buffer — use when an
-    algebraic aggregate is specifically required (e.g. inside another
-    aggregation); otherwise ``latest_per_key``/``latest_by_reduce`` plan
-    strictly faster (see latest_by_reduce docstring)."""
-    cols = df.columns
-    payload = F.struct(*[F.col(c) for c in cols])
-    reduced = (
-        df.withColumn(_GK, _gk_col(keys))
-        .groupBy(_GK, *keys)
-        .agg(F.max_by(payload, _order_struct(order_col, delete_col)).alias("_row"))
-    )
-    return reduced.select(*[F.col(f"_row.{c}").alias(c) for c in cols])
-
-
-def latest_by_window(
-    df: DataFrame,
-    keys: Sequence[str],
-    order_col: str = "lsn",
-    extracted_at_col: str | None = None,
-) -> DataFrame:
-    """Reference-faithful T3: row_number() == 1 over
-    PARTITION BY pk ORDER BY cursor DESC NULLS LAST[, extracted_at DESC]
-    (`BigQuerySqlGenerator.java:500-510`).  NULL cursor sorts oldest (E4)."""
-    order = [F.desc_nulls_last(order_col)]
-    if extracted_at_col is not None:
-        order.append(F.desc(extracted_at_col))
-    w = Window.partitionBy(*keys).orderBy(*order)
-    return (
-        df.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
-
-
-def salted_latest(
-    df: DataFrame,
-    keys: Sequence[str],
-    order_col: str = "lsn",
-    delete_col: str | None = None,
-    salt_buckets: int = 16,
-) -> DataFrame:
-    """Explicit two-stage salted reduction for hot keys.
-
-    Stage 1: group by (keys..., salt = hash(order_col) % salt_buckets) —
-    a key with S× the median volume spreads across salt_buckets reducers.
-    Stage 2: group the ≤ salt_buckets survivors per key.  Equivalent result
-    to ``latest_by_reduce``; used when a downstream op lacks partial
-    aggregation (and as the north-rule's explicit salting evidence)."""
-    cols = df.columns
-    payload = F.struct(*[F.col(c) for c in cols])
-    order = _order_struct(order_col, delete_col)
-    salt = F.pmod(F.xxhash64(F.col(order_col)), F.lit(salt_buckets)).alias("_salt")
-    stage1 = (
-        df.withColumn("_salt", salt)
-        .withColumn(_GK, _gk_col(keys))
-        .repartition(F.col(_GK), *[F.col(k) for k in keys], F.col("_salt"))
-        .groupBy(_GK, *keys, "_salt")
-        .agg(F.max_by(payload, order).alias("_row"), F.max(order).alias("_ord"))
-    )
-    stage2 = stage1.groupBy(_GK, *keys).agg(
-        F.max_by(F.col("_row"), F.col("_ord")).alias("_row")
-    )
-    return stage2.select(*[F.col(f"_row.{c}").alias(c) for c in cols])
-
-
-def drop_tombstones(df: DataFrame, delete_col: str = "_deleted") -> DataFrame:
-    """Final-table user view: tombstoned keys are absent (T5 applied)."""
-    return df.filter(~F.coalesce(F.col(delete_col), F.lit(False)))

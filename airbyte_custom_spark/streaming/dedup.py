@@ -10,8 +10,8 @@ this helper drops them inside the stream with bounded state:
 
 State is evicted once the watermark passes an event's ts, so memory is
 bounded by (event rate × horizon), independent of total stream length.
-NOTE: the merge path is already idempotent for same-lsn replays (max_by is
-insensitive to duplicates of the winning row), so this stage is an
+NOTE: the merge path is already idempotent for same-lsn replays (the
+latest-per-key top-1 keeps one copy of the winning row), so this stage is an
 optimization that shrinks shuffle volume, not a correctness requirement.
 """
 

@@ -33,10 +33,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from airbyte_custom_spark.config import IngestConfig
 from airbyte_custom_spark.lake.table import LakeTable, MergeResult, read_parquet
-from airbyte_custom_spark.operators.dedupe import (
-    NullPrimaryKeyError,
-    salted_latest,
-)
+from airbyte_custom_spark.operators.dedupe import NullPrimaryKeyError
 from airbyte_custom_spark.schema import CDC_EVENT_SCHEMA, JSON_CDC_EVENT_SCHEMA
 from airbyte_custom_spark.streaming.metrics import BatchMetrics, BatchMetricsLog
 
@@ -278,7 +275,7 @@ class CdcIngestJob:
         concurrent: bool,
     ) -> tuple[MergeResult, int, int]:
         """One table's slice of the batch: transform → fused stats → pk
-        policy → lineage → [salt] → merge.  Returns (merge result, events applied,
+        policy → lineage → merge.  Returns (merge result, events applied,
         rows ignored).  ``concurrent`` is set on pool threads, whose merge
         must leave the session confs alone."""
         raw_events = events  # pre-transform, for fused-discovery rebuilds
@@ -350,25 +347,11 @@ class CdcIngestJob:
                 key=lambda d: (d["source_partition"] is None, d["source_partition"]),
             )
 
-        src = events
-        if self.config.salt_buckets > 1:
-            # explicit two-stage salted reduction for pathologically hot
-            # keys; the is-delete tiebreak column makes an equal-lsn
-            # delete/upsert pair resolve to the delete (T5) here too, not
-            # just inside merge's own reduce
-            is_del = (F.col("op") == "d") | F.col("_ab_cdc_deleted_at").isNotNull()
-            src = salted_latest(
-                events.withColumn("_del", is_del),
-                table.primary_key,
-                order_col="lsn",
-                delete_col="_del",
-                salt_buckets=self.config.salt_buckets,
-            ).drop("_del")
-        # no pre-reduce otherwise: merge's union + latest_per_key IS the
+        # no pre-reduce: merge's union + latest_per_key IS the
         # latest-per-key reduction, with a map-side top-1 per key — a
         # separate reduce would just add a full extra shuffle of the batch
         result = table.merge(
-            src,
+            events,
             batch_id=batch_id,
             query_id=qid,
             lineage=lineage,

@@ -202,12 +202,12 @@ def child_headline_run(n_events: int, seg_dir: str) -> None:
     log(f"  e2e_apply: {head['seconds']:.1f}s → {head['events_per_sec']:,.0f} ev/s "
         f"({head['batches']} batches, {head['final_rows']} final rows)")
 
-    from airbyte_custom_spark.operators.dedupe import latest_by_reduce
+    from airbyte_custom_spark.operators.dedupe import latest_per_key
     from airbyte_custom_spark.schema import CDC_EVENT_SCHEMA
 
     events = spark.read.schema(CDC_EVENT_SCHEMA).parquet(seg_dir)
     t0 = time.monotonic()
-    latest_by_reduce(events, ("conv_id", "turn_idx")).write.mode("overwrite").format(
+    latest_per_key(events, ("conv_id", "turn_idx")).write.mode("overwrite").format(
         "noop"
     ).save()
     queries["latest_by_reduce"] = round(time.monotonic() - t0, 3)

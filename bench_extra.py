@@ -62,7 +62,7 @@ def main() -> None:
 
     from airbyte_custom_spark.config import IngestConfig
     from airbyte_custom_spark.lake.table import LakeTable
-    from airbyte_custom_spark.operators.dedupe import latest_by_maxby, latest_per_key
+    from airbyte_custom_spark.operators.dedupe import latest_per_key
     from airbyte_custom_spark.schema import CDC_EVENT_SCHEMA, TRANSCRIPT_SCHEMA
     from airbyte_custom_spark.session import get_spark
     from airbyte_custom_spark.sources.generator import (
@@ -124,11 +124,6 @@ def main() -> None:
     events = spark.read.schema(CDC_EVENT_SCHEMA).parquet(seg_dir)
 
     if "latest" in phases:
-        # maxby = the historical algebraic formulation; latest_by_reduce
-        # itself now delegates to latest_per_key, so comparing the two
-        # NAMES would be an A/A — compare the two FORMULATIONS
-        tm.run("latest_by_maxby", lambda: noop(
-            latest_by_maxby(events, ("conv_id", "turn_idx"))))
         tm.run("latest_per_key_ref", lambda: noop(
             latest_per_key(events, ("conv_id", "turn_idx"))))
 

@@ -6,7 +6,7 @@ Spark session — the only comparison that survives this host's co-tenant
 weather (BENCH.md: identical code swings 2x between windows).
 
 Usage: python scripts/ab_r06.py <experiment> [--events N] [--reps K]
-Experiments: genwrite, latest, zstdlevel
+Experiments: genwrite, zstdlevel
 """
 
 from __future__ import annotations
@@ -95,29 +95,6 @@ def main() -> None:
         for _ in range(args.reps):
             rep("old_hash_chunk", write_old)
             rep("new_probe_chunk", write_new)
-
-    elif args.experiment == "latest":
-        from airbyte_custom_spark.operators.dedupe import (
-            latest_by_maxby,
-            latest_per_key,
-        )
-
-        seg = os.path.join(SHM, "seg-latest")
-        if not os.path.isdir(seg):
-            write_event_chunks(mk_events(), seg, n_chunks=32)
-        from airbyte_custom_spark.schema import CDC_EVENT_SCHEMA
-
-        events = spark.read.schema(CDC_EVENT_SCHEMA).parquet(seg)
-
-        def noop(df):
-            df.write.format("noop").mode("overwrite").save()
-
-        pk = ("conv_id", "turn_idx")
-        noop(latest_per_key(events, pk))  # warm
-        noop(latest_by_maxby(events, pk))
-        for _ in range(args.reps):
-            rep("maxby", lambda: noop(latest_by_maxby(events, pk)))
-            rep("window", lambda: noop(latest_per_key(events, pk)))
 
     elif args.experiment == "zstdlevel":
         from airbyte_custom_spark.lake.table import LakeTable

@@ -7,6 +7,9 @@ top-1 (operators/dedupe.py): a hot key's multiplicity collapses BEFORE
 the pk-hash exchange, so one reducer never serializes the batch.
 
 Usage:  python scripts/skew_ab.py [n_events] [cores]
+
+``cores`` defaults to $SPARK_GRAFT_CPUS, else the CPUs this process may
+run on (nproc).
 """
 
 import os
@@ -62,7 +65,10 @@ def run_one(spark, n_events: int, hot: float) -> dict:
 
 def main() -> None:
     n = int(sys.argv[1]) if len(sys.argv) > 1 else 8_000_000
-    cores = int(sys.argv[2]) if len(sys.argv) > 2 else 32
+    cores = int(
+        sys.argv[2] if len(sys.argv) > 2
+        else os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
+    )
     from airbyte_custom_spark.session import get_spark
 
     spark = get_spark(app_name="skew-ab", master=f"local[{cores}]")

@@ -1,16 +1,19 @@
-"""hot_key_skew fixture (FIXTURES.md §3): salting flattens partition sizes.
+"""hot_key_skew fixture (FIXTURES.md §3): the map-side top-1 holds the hot
+key to at most one row per map task across the exchange.
 
-A single hot (conv_id, turn_idx) holding ~50% of a batch serializes one
-reducer under pk-hash partitioning; the salted two-stage reduction bounds
-every partition near the median.  Also proves the salted path returns the
-same result as the plain reduce on skewed data.
+A single hot (conv_id, turn_idx) holding ~50% of a batch would serialize
+one reducer under pk-hash partitioning if its rows crossed the exchange.
+``latest_per_key`` plans a WindowGroupLimit(Partial) before the exchange,
+so each map task ships one row per key it holds; the shuffle's
+records-written metric shows it.
 """
 
 from pyspark.sql import functions as F
 
-from airbyte_custom_spark.operators.dedupe import latest_by_reduce, salted_latest
+from airbyte_custom_spark.operators.dedupe import latest_per_key
 
 PK = ("conv_id", "turn_idx")
+HOT = ("conv-hot", 0)
 
 
 def skewed_events(spark, n=20_000):
@@ -28,35 +31,59 @@ def skewed_events(spark, n=20_000):
     )
 
 
-def _partition_sizes(df, n_parts, cols):
-    sizes = (
-        df.repartition(n_parts, *cols)
-        .groupBy(F.spark_partition_id().alias("p"))
-        .count()
+def _shuffle_records_written(df) -> list[int]:
+    """records-written metric of every shuffle exchange in ``df``'s
+    executed plan (AQE query stages unwrapped); read after an action."""
+    out = []
+
+    def walk(p):
+        name = p.getClass().getSimpleName()
+        if name == "AdaptiveSparkPlanExec":
+            return walk(p.executedPlan())
+        if name.endswith("QueryStageExec"):
+            return walk(p.plan())
+        if name == "ShuffleExchangeExec":
+            out.append(p.metrics().apply("shuffleRecordsWritten").value())
+        children = p.children()
+        for i in range(children.size()):
+            walk(children.apply(i))
+
+    walk(df._jdf.queryExecution().executedPlan())
+    return out
+
+
+def test_hot_key_crosses_exchange_once_per_map_task(spark):
+    ev = skewed_events(spark)
+    rows = [r.asDict() for r in ev.collect()]
+    expected: dict = {}
+    for r in rows:
+        k = (r["conv_id"], r["turn_idx"])
+        if k not in expected or r["lsn"] > expected[k][0]:
+            expected[k] = (r["lsn"], r["text"])
+
+    latest = latest_per_key(ev, PK)
+    got = {(r["conv_id"], r["turn_idx"]): (r["lsn"], r["text"]) for r in latest.collect()}
+    assert got == expected
+    # hot events have even ids → lsn = id+1 is odd, max = 19_999
+    assert got[HOT][0] == 19_999
+
+    # per map task: does it hold the hot key, and how many cold keys
+    per_task = (
+        ev.groupBy(F.spark_partition_id().alias("p"))
+        .agg(
+            F.max((F.col("conv_id") == HOT[0]).cast("int")).alias("hot"),
+            F.countDistinct(
+                F.when(F.col("conv_id") != HOT[0], F.struct(*PK))
+            ).alias("cold"),
+        )
         .collect()
     )
-    return sorted(r["count"] for r in sizes)
+    hot_tasks = sum(r["hot"] for r in per_task)
+    cold_keys = sum(r["cold"] for r in per_task)
+    assert hot_tasks > 1, per_task
 
-
-def test_pk_partitioning_is_skewed_salt_flattens(spark):
-    ev = skewed_events(spark)
-    plain = _partition_sizes(ev, 8, [F.col(c) for c in PK])
-    assert plain[-1] > 3 * (plain[len(plain) // 2] or 1), (
-        f"fixture not skewed enough: {plain}"
-    )
-    salt = F.pmod(F.xxhash64("lsn"), F.lit(16))
-    salted = _partition_sizes(ev.withColumn("_s", salt), 8, [*[F.col(c) for c in PK], F.col("_s")])
-    median = salted[len(salted) // 2]
-    assert salted[-1] <= 2 * median, (
-        f"salted partitions not within 2x median: {salted}"
-    )
-
-
-def test_salted_result_equals_plain_on_skew(spark):
-    ev = skewed_events(spark, n=10_000)
-    a = {tuple(r) for r in latest_by_reduce(ev, PK).select(*PK, "lsn", "text").collect()}
-    b = {tuple(r) for r in salted_latest(ev, PK, salt_buckets=16).select(*PK, "lsn", "text").collect()}
-    assert a == b
-    hot = [r for r in a if r[0] == "conv-hot"]
-    # hot events have even ids → lsn = id+1 is odd, max = 9999
-    assert len(hot) == 1 and hot[0][2] == 9_999  # highest lsn won
+    written = _shuffle_records_written(latest)
+    assert len(written) == 1, written
+    # each map task ships its cold keys once and the hot key at most once;
+    # without the map-side partial all 10_000 hot rows would cross
+    assert written[0] <= cold_keys + hot_tasks, (written, cold_keys, hot_tasks)

@@ -148,15 +148,6 @@ def test_backfill_then_tail(spark, tmp_path):
     assert rows[("a", 0)] != "old-0"  # tail won
 
 
-def test_salted_pipeline_matches(spark, env):
-    events, src, table, ckpt = env
-    job = CdcIngestJob(
-        spark, table.path, src, ckpt, IngestConfig(salt_buckets=8, max_files_per_trigger=3)
-    )
-    job.run_available_now()
-    assert_matches_replay(LakeTable.load(spark, table.path).read(), events)
-
-
 def test_batch_resolves_to_pruned_parquet_scan(spark, env, monkeypatch):
     """Round-3 scaling fix: foreachBatch's RDD-backed DataFrame (Scan
     ExistingRDD — full-width rows, no pruning, re-executed per downstream
