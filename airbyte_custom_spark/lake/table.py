@@ -45,10 +45,13 @@ Design points mirroring Iceberg, chosen for 100-TB behavior:
   collapse before the exchange (SURVEY.md §4 "dedup before merge").  The
   reduce exchange IS the file-layout exchange: bucket =
   pmod(murmur3(pk), num_buckets) uses the exact hash HashPartitioning
-  uses (seed 42), and the merge pins
-  shuffle partitions to num_buckets × files_per_bucket, so reducer
-  partition p holds exactly bucket p % num_buckets — the reduce output is
-  already bucket-clustered and no post-reduce repartition is needed.
+  uses (seed 42), and the merge pins the exchange to P reducers, P the
+  smallest divisor of num_buckets that is ≥ the session's default
+  parallelism (num_buckets × files_per_bucket when files_per_bucket > 1).
+  Since P divides num_buckets, reducer p holds exactly the whole buckets
+  b ≡ p (mod P) — the reduce output is already bucket-clustered and no
+  post-reduce repartition is needed, and a small batch runs one write
+  task per core instead of one per bucket.
   (Round-1 shape shuffled the merged table a second time purely for
   layout; the alignment removes that entire exchange.)
 
@@ -230,6 +233,23 @@ def read_parquet(
                 spark.conf.set(_LISTING_THRESHOLD, prior)
             else:
                 spark.conf.unset(_LISTING_THRESHOLD)
+
+
+def pinned_reducers(num_buckets: int, cores: int) -> int:
+    """Reducer count of the pinned merge exchange of a table with one
+    file per bucket: the smallest divisor of ``num_buckets`` that is at
+    least ``cores`` (``num_buckets`` itself when there are at least as
+    many cores).
+
+    Because the count divides ``num_buckets`` and the bucket is the
+    exchange's own hash, reducer p holds exactly the whole buckets
+    b ≡ p (mod count): the bucketed write still writes one file per
+    touched bucket, with no repartition, in as few write tasks as keep
+    every core busy."""
+    return next(
+        d for d in range(min(cores, num_buckets), num_buckets + 1)
+        if num_buckets % d == 0
+    )
 
 
 def local_frame(
@@ -858,9 +878,10 @@ class LakeTable:
         HashPartitioning uses — over exactly the columns the merge reduce
         partitions by (xxhash64 sort-prefix first, then the keys; see
         operators/dedupe.py): when bucket_keys == the primary key and
-        shuffle partitions P is a multiple of num_buckets, reducer
-        partition p contains exactly bucket p % num_buckets and the merge's
-        reduce exchange doubles as the file-layout exchange.
+        shuffle partitions P divides num_buckets, reducer partition p
+        contains exactly the whole buckets b ≡ p (mod P) (when P is a
+        multiple of num_buckets, exactly bucket p % num_buckets) and the
+        merge's reduce exchange doubles as the file-layout exchange.
 
         ``num_buckets`` overrides the committed layout — used by
         ``rebucket`` to hash into the NEW layout while the table still
@@ -1556,19 +1577,33 @@ class LakeTable:
 
     @contextmanager
     def _pinned_layout(self, enabled: bool):
-        """Pin the next aggregation's exchange to the bucket layout
-        (num_buckets × files_per_bucket reducers, AQE coalescing off —
-        the partition count is a layout CONTRACT, not a sizing hint; AQE
-        re-merging it was observed collapsing 64 → 22 tasks and with it
-        the reducer↔bucket alignment).  No-op when ``enabled`` is False."""
+        """Pin the next aggregation's exchange to the bucket layout, AQE
+        coalescing off — the partition count is a layout CONTRACT, not a
+        sizing hint (AQE re-merging it was observed collapsing 64 → 22
+        tasks and with it the reducer↔bucket alignment).
+
+        With one file per bucket the exchange gets
+        ``pinned_reducers(num_buckets, defaultParallelism)`` reducers, so
+        reducer p holds the whole buckets ≡ p (mod that count) and a small
+        batch runs one write task per core, not one per bucket.  With
+        ``files_per_bucket`` > 1 it gets num_buckets × files_per_bucket, so
+        each bucket spreads over that many reducers and files.  No-op when
+        ``enabled`` is False."""
         if not enabled:
             yield
             return
         conf = self.spark.conf
         fpb = int(self.snapshot.get("files_per_bucket", 1))
+        reducers = (
+            self.num_buckets * fpb
+            if fpb > 1
+            else pinned_reducers(
+                self.num_buckets, self.spark.sparkContext.defaultParallelism
+            )
+        )
         prev_shuffle = conf.get("spark.sql.shuffle.partitions")
         prev_coalesce = conf.get("spark.sql.adaptive.coalescePartitions.enabled")
-        conf.set("spark.sql.shuffle.partitions", str(self.num_buckets * fpb))
+        conf.set("spark.sql.shuffle.partitions", str(reducers))
         conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
         try:
             yield
@@ -1622,8 +1657,9 @@ class LakeTable:
         (``_merged_frame``: WindowGroupLimit top-1 per key on the map
         side, so hot keys collapse before the exchange) IS the
         latest-per-key reduction, and when bucket_keys == the
-        primary key its exchange is hash-aligned with the file layout (see
-        module docstring) so the whole merge shuffles exactly once.
+        primary key its exchange is hash-aligned with the file layout —
+        each reducer holds whole buckets (see module docstring and
+        ``_pinned_layout``) — so the whole merge shuffles exactly once.
 
         ``pin_exchange=False`` opts out of the aligned single-exchange
         plan: the reduce runs at the session's shuffle-partition count
@@ -1698,9 +1734,9 @@ class LakeTable:
 
         snap = self._next_snapshot("merge")
         # layout alignment (see module docstring): when the bucket keys are
-        # exactly the groupBy keys, pin the aggregation exchange to
-        # num_buckets × files_per_bucket partitions — reducer p then holds
-        # exactly bucket p % num_buckets, so the write needs NO repartition
+        # exactly the reduce keys, pin the reduce exchange to P reducers
+        # (_pinned_layout) — reducer p then holds the whole buckets
+        # ≡ p (mod P), so the write needs NO repartition
         aligned = pin_exchange and list(self.snapshot["bucket_keys"]) == list(pk)
         try:
             with self._pinned_layout(aligned):
@@ -1826,8 +1862,9 @@ class LakeTable:
         equality-delete files per commit, `IcebergConsumer.java:140-224`
         is the CoW-equivalent reference sink this trades read work
         against).  Delta files use the SAME bucket layout as the base —
-        the batch reduce's pinned exchange doubles as the layout exchange
-        (one shuffle per merge, like CoW), and compaction's fold prunes
+        the batch reduce's pinned exchange (whole buckets per reducer, see
+        ``_pinned_layout``) doubles as the layout exchange (one shuffle
+        per merge, like CoW), and compaction's fold prunes
         to delta-touched buckets only."""
         if batch_id is not None and batch_id <= self.last_committed_batch(query_id):
             return MergeResult(version=None, skipped=True)

@@ -22,12 +22,24 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) a SparkSession.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (32 if unset).
-    ``shuffle_partitions`` defaults to the core count — the guide's
-    "set it to ~cores for local" rule; a real cluster job would set it
-    to ~2-3x total cores.
+    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]``, else one thread
+    per CPU this process may run on.  ``shuffle_partitions`` defaults to
+    the core count — the guide's "set it to ~cores for local" rule; a
+    real cluster job would set it to ~2-3x total cores.
+
+    PySpark's DataFrame call-site capture
+    (``spark.python.sql.dataFrameDebugging.enabled``) is off.  With it on,
+    every ``F.col`` and ``Column`` method records its Python file:line
+    through an active-session lookup, a conf read, a failed ``import
+    IPython`` (a ``sys.path`` rescan) and two py4j calls — about 0.1 s of
+    driver time per micro-batch.  What is given up: a runtime error's
+    DataFrame query context no longer names the Python line that built
+    the failing column.  The engine's row path casts with ``try_cast``,
+    so by design it raises no ANSI runtime errors.
     """
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(
+        os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
+    )
     if master is None:
         master = f"local[{cpus}]"
     if shuffle_partitions is None:
@@ -52,6 +64,7 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         # moderate heap on purpose: a 48g ceiling makes the JVM grow the
         # heap instead of collecting — kernel page-zeroing storms (90%+ sys
         # time) and wildly erratic batch times at high core counts.  12g

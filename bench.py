@@ -47,7 +47,7 @@ REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
 # headline events scale with sf: sf0.1 → 10M events (~18 s at local[32]).
 # At 2M events the run was ~60% per-batch fixed overhead (566k ev/s at 10M
 # vs 198k at 2M, same window) — the larger run is the representative

@@ -24,7 +24,7 @@ import time
 REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
 
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
 SHM = "/dev/shm/acs-bench-extra" if os.path.isdir("/dev/shm") else tempfile.gettempdir()
 N_CHUNKS = 32
 

@@ -23,6 +23,20 @@ def sf_dir():
     return SF_DIR
 
 
+def _run_in_group(sc, action) -> str:
+    """Run ``action()`` under a fresh job group and return the group, once
+    its job events have reached the status store."""
+    group = f"count-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc._jsc.clearJobGroup()
+    # job-start events reach the status store through the listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return group
+
+
 @pytest.fixture
 def count_jobs(spark):
     """``count_jobs(action)`` runs ``action()`` under a fresh job group and
@@ -31,14 +45,23 @@ def count_jobs(spark):
     sc = spark.sparkContext
 
     def run(action) -> int:
-        group = f"count-jobs-{uuid.uuid4().hex}"
-        sc.setJobGroup(group, group)
-        try:
-            action()
-        finally:
-            sc._jsc.clearJobGroup()
-        # job-start events reach the status store through the listener bus
-        sc._jsc.sc().listenerBus().waitUntilEmpty()
-        return len(sc.statusTracker().getJobIdsForGroup(group))
+        return len(sc.statusTracker().getJobIdsForGroup(_run_in_group(sc, action)))
+
+    return run
+
+
+@pytest.fixture
+def stage_tasks(spark):
+    """``stage_tasks(action)`` runs ``action()`` under a fresh job group and
+    returns the task counts of the stages it ran (skipped stages left
+    out), in stage-id order."""
+    sc = spark.sparkContext
+
+    def run(action) -> list[int]:
+        st = sc.statusTracker()
+        group = _run_in_group(sc, action)
+        stages = {s for j in st.getJobIdsForGroup(group) for s in st.getJobInfo(j).stageIds}
+        infos = [st.getStageInfo(s) for s in sorted(stages)]
+        return [i.numTasks for i in infos if i.numCompletedTasks > 0]
 
     return run
