@@ -1724,8 +1724,8 @@ def q_json_evolution_final_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     only in events past the LSN midpoint (``to_json`` drops NULL fields,
     so early envelopes carry no such keys at all, exactly like a source
     ALTER TABLE ADD COLUMN mid-replication).  `JsonCdcIngestJob` must
-    discover the new keys with the exact distributed key-set aggregate,
-    evolve the table in place (E1/E2, `AirbyteType.java:16`,
+    discover the new keys exactly (per-row key tags folded into each
+    batch's stats aggregation), evolve the table in place (E1/E2, `AirbyteType.java:16`,
     `typing-deduping.md:5-70`), keep merging, and read pre-evolution
     rows back as NULL — the final state must match the oracle's CASE
     replay, proving no late-column value is lost and no early row is

@@ -80,3 +80,9 @@ class IngestConfig:
     # (`DefaultTyperDeduper` cadence).  The check reads snapshot rollups
     # only (zero I/O).  None = never auto-fold (maintenance job folds).
     mor_delta_budget: int | None = None
+
+    def __post_init__(self):
+        if self.pk_violations not in ("fail", "ignore"):
+            raise ValueError(
+                f"pk_violations must be 'fail' or 'ignore', got {self.pk_violations!r}"
+            )

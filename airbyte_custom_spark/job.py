@@ -149,7 +149,9 @@ def main(argv: list[str] | None = None, stop_session: bool = True) -> int:
     rt.add_argument(
         "--schema-json", default=None,
         help="optional Spark StructType JSON for the new typing decision; "
-             "omitted = re-derive (exact keys + sampled types)",
+             "omitted = re-derive with the ingest's JSON typing stage "
+             "(exact keys + sampled types), and the printed columns then "
+             "follow key discovery order, not sorted order",
     )
     rt.add_argument("--buckets", type=int, default=16)
 

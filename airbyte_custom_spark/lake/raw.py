@@ -73,7 +73,6 @@ def retype_from_raw(
     payload_schema=None,
     primary_key: tuple[str, ...] = ("conv_id", "turn_idx"),
     num_buckets: int = 16,
-    payload_col: str = "payload",
 ) -> LakeTable:
     """Rebuild a typed FINAL table from retained raw JSON envelopes — the
     reference's re-type-from-raw guarantee (`typing-deduping.md:5-70`:
@@ -81,20 +80,19 @@ def retype_from_raw(
     be revisited by re-running T+D).  ``raw`` is the append-only envelope
     table a `JsonCdcIngestJob(raw_table_path=…)` maintains.
 
-    With ``payload_schema`` None, the schema is re-derived: EXACT key set
-    via the distributed aggregate, types from the bounded sample — i.e.
-    the same inference the stream ran, but over all history at once (so a
-    type that stabilized late applies to every row).  One merge call =
-    one WindowGroupLimit reduce over the full history; delete events
-    tombstone their keys exactly as live ingest would."""
-    from airbyte_custom_spark.operators.schema_evo import (
-        infer_payload_schema,
-        payload_keys,
-    )
-    from airbyte_custom_spark.operators.typed import (
-        extract_payload,
-        normalize_columns,
-    )
+    With ``payload_schema`` None, the final table starts with an empty
+    payload and all history runs through the ingest's own JSON typing
+    stage at once (`streaming/pipeline.py::infer_evolve_extract`): exact
+    key discovery, the same P7 naming and collision rule, types from the
+    bounded sample — so raw keys land in the columns the live ingest gave
+    them, and a type that stabilized late applies to every row.  Columns
+    come in discovery order.  With a ``payload_schema``, the rows are
+    typed under it as given.  One merge call = one WindowGroupLimit
+    reduce over the full history; delete events tombstone their keys
+    exactly as live ingest would."""
+    from airbyte_custom_spark.operators.typed import extract_payload
+    from airbyte_custom_spark.schema import PAYLOAD_COL
+    from airbyte_custom_spark.streaming.pipeline import infer_evolve_extract
 
     rows = raw.read(include_deleted=True, include_meta=True)
     env_cols = [
@@ -103,46 +101,18 @@ def retype_from_raw(
         if c in rows.columns
     ]
     events = rows.select(
-        F.col("_lsn").alias("lsn"), F.col(payload_col), *[F.col(c) for c in env_cols]
+        F.col("_lsn").alias("lsn"), F.col(PAYLOAD_COL), *[F.col(c) for c in env_cols]
     )
-    key_map: dict[str, str] = {}
-    if payload_schema is None:
-        keys = payload_keys(events, payload_col)
-        inferred = infer_payload_schema(events, payload_col, keys=keys)
-        # P7 normalization over the FULL history's key set at once —
-        # deterministic (sorted), independent of arrival order; engine
-        # meta column names are reserved (suffix past them, same rule as
-        # the streaming path)
-        from airbyte_custom_spark.schema import RESERVED_COLUMNS
-
-        norm = normalize_columns(sorted(keys))
-        reserved = set(RESERVED_COLUMNS) | set(events.columns)
-        used = set(norm.values()) | reserved
-        for rk in sorted(norm):
-            if norm[rk] in reserved:
-                base, i = norm[rk], 0
-                cand = base
-                while cand in used:
-                    i += 1
-                    cand = f"{base}_{i}"
-                norm[rk] = cand
-                used.add(cand)
-        key_map = {rk: col for rk, col in norm.items() if rk != col}
-        by_raw = {f.name: f.dataType for f in inferred.fields}
-        payload_schema = T.StructType(
-            [
-                T.StructField(norm[raw], by_raw[raw], True)
-                for raw in sorted(keys)
-            ]
-        )
     final = LakeTable.create(
         raw.spark,
         final_path,
-        payload_schema,
+        payload_schema or T.StructType([]),
         primary_key=primary_key,
         num_buckets=num_buckets,
-        payload_key_map=key_map,
     )
-    typed = extract_payload(events, payload_schema, payload_col, key_map=key_map)
+    if payload_schema is None:
+        typed = infer_evolve_extract(events, final)
+    else:
+        typed = extract_payload(events, payload_schema)
     final.merge(typed, batch_id=0, query_id="retype-from-raw")
     return final

@@ -7,5 +7,4 @@ from airbyte_custom_spark.operators.typed import (  # noqa: F401
     project_and_cast,
     inject_cdc_metadata,
     normalize_name,
-    normalize_columns,
 )

@@ -8,9 +8,11 @@ Reference behavior reproduced:
      (LakeTable.soft_reset, `BigQuerySqlGenerator.java:322-335`);
   E3 dropped column: final keeps history, new writes stop populating it
      (modeled as evolution-with-null — the column stays, new rows are null);
-  CDC-mode rule: schema changes apply at sync boundaries, never mid-stream
-     (`docs/understanding-airbyte/cdc.md:27`) — a running StreamingQuery has
-     a fixed schema, so evolution happens between runs.
+  CDC-mode rule: the reference applies schema changes at sync boundaries
+     (`docs/understanding-airbyte/cdc.md:27`).  A running StreamingQuery
+     keeps a fixed SOURCE schema, but the JSON jobs evolve the TABLE
+     mid-stream: each micro-batch's new keys and widenings commit before
+     that batch's merge (`streaming/pipeline.py::evolve_from_tags`).
 
 The payload-inference stage is Arrow-vectorized: a bounded sample of JSON
 payloads is pulled to the driver in one Arrow batch (``toPandas`` with
@@ -26,7 +28,7 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, functions as F, types as T
 
-from airbyte_custom_spark.schema import is_widening
+from airbyte_custom_spark.schema import PAYLOAD_COL, is_widening
 
 
 @dataclass
@@ -117,35 +119,6 @@ def evolve_table_for(
 # Arrow-vectorized JSON payload schema inference
 # ---------------------------------------------------------------------------
 
-def payload_keys(df: DataFrame, json_col: str) -> list[str]:
-    """EXACT top-level key set of a batch's JSON payloads, computed with a
-    distributed JVM aggregate — not a sample.
-
-    `from_json(col, map<string,string>)` parses every payload once (nested
-    values arrive as raw JSON text, null values keep their key), then
-    `explode(map_keys) → distinct` reduces to the key set with map-side
-    partial aggregation: only distinct (partition, key) strings ever cross
-    the exchange, so the job is O(rows) scan + O(keys) shuffle at any
-    scale.  Closes the round-3 sampled-inference hole: a column whose
-    first occurrence is beyond the driver sample can no longer be silently
-    dropped from the target schema (the reference never loses payload
-    bytes — `typing-deduping.md:5-70`)."""
-    rows = (
-        df.select(
-            F.explode(
-                F.map_keys(
-                    F.from_json(
-                        F.col(json_col), T.MapType(T.StringType(), T.StringType())
-                    )
-                )
-            ).alias("k")
-        )
-        .distinct()
-        .collect()
-    )
-    return sorted(r["k"] for r in rows)
-
-
 TAG_SEP = "\x1f"
 
 # widen-tag namespace: "\x00" can never be a struct column name (normalized
@@ -180,7 +153,7 @@ def widen_probes_for(payload: T.StructType, raw_of: dict[str, str]) -> list[tupl
     return probes
 
 
-def widen_probe_expr(json_col: str, probes: list[tuple]) -> F.Column | None:
+def widen_probe_expr(probes: list[tuple]) -> F.Column | None:
     """Per-row array of EXACT widen tags — rides the same aggregation as
     ``tagged_key_expr`` (round-4: the widen analog of exact key discovery).
     For each committed integer/long payload column — top-level OR a
@@ -199,7 +172,7 @@ def widen_probe_expr(json_col: str, probes: list[tuple]) -> F.Column | None:
     if not probes:
         return None
     _map = T.MapType(T.StringType(), T.StringType())
-    pmap = F.from_json(F.col(json_col), _map)
+    pmap = F.from_json(F.col(PAYLOAD_COL), _map)
     tags = []
     for raw, sub, path, tname in probes:
         if sub is None:
@@ -227,21 +200,29 @@ def widen_probe_expr(json_col: str, probes: list[tuple]) -> F.Column | None:
 
 
 def tagged_key_expr(
-    json_col: str,
     struct_cols: list[str] | None = None,
     widen_probes: list[tuple] | None = None,
 ) -> F.Column:
-    """Per-row array of discovery tags — the NON-collecting form of
-    ``discover_payload_keys``, designed to ride an existing aggregation:
-    top-level payload keys as ``"\\x1f<key>"``, second-level keys of the
-    named struct columns as ``"<col>\\x1f<key>"``, plus exact widen tags
-    (``widen_probe_expr``) for committed numeric columns.  Attach as a
-    column, fold with ``array_distinct(flatten(collect_set(...)))`` inside
-    the stats agg, and the batch's exact key set costs ZERO extra jobs
-    (partial aggregation folds per-group key-set combos map-side)."""
+    """Per-row array of discovery tags — the one payload-key discovery,
+    designed to ride an existing aggregation: top-level payload keys as
+    ``"\\x1f<key>"``, second-level keys of the named struct columns as
+    ``"<col>\\x1f<key>"``, plus exact widen tags (``widen_probe_expr``)
+    for committed numeric columns.  Attach as a column, fold with
+    ``array_distinct(flatten(collect_set(...)))`` inside the stats agg,
+    and the batch's exact key set costs ZERO extra jobs (partial
+    aggregation folds per-group key-set combos map-side);
+    ``decode_discovery_tags`` reads the folded set back.
+
+    Depth covered exactly: 2 (top-level always, subkeys of known struct
+    columns; nested values arrive as raw JSON text in the string map, so
+    they re-parse as a map one level down).  Deeper levels type/extend
+    via the bounded driver sample — a depth-3 key outside the sample
+    lands inside its parent's typed value only if the parent type
+    already carries it (the first batch of a brand-new struct column is
+    likewise sample-typed, exact from its second batch on)."""
     _map = T.MapType(T.StringType(), T.StringType())
     empty = F.array().cast("array<string>")
-    pmap = F.from_json(F.col(json_col), _map)
+    pmap = F.from_json(F.col(PAYLOAD_COL), _map)
 
     def _tagger(prefix: str):
         return lambda k: F.concat(F.lit(prefix + TAG_SEP), k)
@@ -252,7 +233,7 @@ def tagged_key_expr(
     for c in struct_cols or []:
         sub = F.map_keys(F.from_json(pmap.getItem(c), _map))
         parts.append(F.coalesce(F.transform(sub, _tagger(c)), empty))
-    w = widen_probe_expr(json_col, widen_probes or [])
+    w = widen_probe_expr(widen_probes or [])
     if w is not None:
         parts.append(F.coalesce(F.transform(w, _tagger(WIDEN_PREFIX)), empty))
     return F.concat(*parts) if len(parts) > 1 else parts[0]
@@ -280,61 +261,6 @@ def decode_discovery_tags(
         else:
             nested.setdefault(c, []).append(k)
     return sorted(set(top)), {c: sorted(set(ks)) for c, ks in nested.items()}, widen
-
-
-def discover_payload_keys(
-    df: DataFrame,
-    json_col: str,
-    struct_cols: list[str] | None = None,
-    widen_probes: list[tuple] | None = None,
-) -> tuple[list[str], dict[str, list[str]], dict[str, str]]:
-    """Exact key discovery, fused: ONE distributed aggregate returns the
-    batch's top-level payload key set AND, for each named struct-typed
-    column, its exact second-level key set (nested values arrive as raw
-    JSON text in the string map, so they re-parse as a map one level
-    down) AND, for committed numeric columns, the exact widen demands
-    (``widen_probe_expr``).  Tagged (column, key) pairs union through a
-    single explode→distinct — still only distinct strings cross the
-    exchange.
-
-    Depth covered exactly: 2 (top-level always, subkeys of known struct
-    columns).  Deeper levels type/extend via the bounded driver sample —
-    a depth-3 key outside the sample lands inside its parent's typed
-    value only if the parent type already carries it (documented margin;
-    the first batch of a brand-new struct column is likewise
-    sample-typed, exact from its second batch on)."""
-    _map = T.MapType(T.StringType(), T.StringType())
-    pmap = F.from_json(F.col(json_col), _map)
-    entries = [F.struct(F.lit("").alias("c"), F.map_keys(pmap).alias("ks"))]
-    for c in struct_cols or []:
-        entries.append(
-            F.struct(
-                F.lit(c).alias("c"),
-                F.map_keys(F.from_json(pmap.getItem(c), _map)).alias("ks"),
-            )
-        )
-    w = widen_probe_expr(json_col, widen_probes or [])
-    if w is not None:
-        entries.append(F.struct(F.lit(WIDEN_PREFIX).alias("c"), w.alias("ks")))
-    rows = (
-        df.select(F.explode(F.array(*entries)).alias("e"))
-        .select(F.col("e.c").alias("c"), F.explode(F.col("e.ks")).alias("k"))
-        .distinct()
-        .collect()
-    )
-    top: list[str] = []
-    nested: dict[str, list[str]] = {}
-    widen: dict[str, str] = {}
-    for r in rows:
-        if r["c"] == WIDEN_PREFIX:
-            path, target = r["k"].rsplit(TAG_SEP, 1)
-            if widen.get(path) != "double":
-                widen[path] = target
-        elif r["c"] == "":
-            top.append(r["k"])
-        else:
-            nested.setdefault(r["c"], []).append(r["k"])
-    return sorted(top), {c: sorted(ks) for c, ks in nested.items()}, widen
 
 
 def _infer_value_type(values: list) -> T.DataType:
@@ -415,53 +341,42 @@ def prune_untyped(dt: T.DataType) -> T.DataType | None:
 
 
 def infer_payload_schema(
-    df: DataFrame,
-    json_col: str,
-    sample_rows: int = 2048,
-    keys: list[str] | None = None,
-    keep_untyped: bool = False,
+    df: DataFrame, keys: list[str], sample_rows: int = 2048
 ) -> T.StructType:
-    """Infer a StructType from a column of JSON object strings.
+    """Infer a StructType from the JSON object strings of ``PAYLOAD_COL``.
 
     Pulls ≤ ``sample_rows`` payloads to the driver in one Arrow batch and
     infers with pandas — the 'vectorized Arrow-based schema-diff stage' of
     the north star.  Bounded, metadata-only; never runs per row over the
     full stream.
 
-    ``keys`` (from ``payload_keys``) makes the FIELD SET exact: the driver
-    sample decides only each key's TYPE; a key absent from the sample
-    falls back to StringType (lossless — the raw JSON text is preserved
-    and can be retyped by a later evolution/soft_reset), so rare late
-    columns keep their values instead of being dropped."""
-    sample = (
-        df.select(json_col).filter(f"{json_col} is not null").limit(sample_rows).toPandas()
-    )
-    parsed: list[dict] = [json.loads(s) for s in sample[json_col]] if not sample.empty else []
+    ``keys`` (the exact discovered key set, ``decode_discovery_tags``)
+    makes the FIELD SET exact: the driver sample decides only each key's
+    TYPE; a key absent from the sample falls back to StringType
+    (lossless — the raw JSON text is preserved and can be retyped by a
+    later evolution/soft_reset), so rare late columns keep their values
+    instead of being dropped.
+
+    The NullType no-evidence sentinel is returned as inferred, so the
+    caller can tell a sampled-but-all-null (sub)key apart from one the
+    sample never saw; it resolves them with ``prune_untyped``."""
+    payload = F.col(PAYLOAD_COL)
+    sample = df.select(payload).filter(payload.isNotNull()).limit(sample_rows).toPandas()
+    parsed: list[dict] = [json.loads(s) for s in sample[PAYLOAD_COL]] if not sample.empty else []
     names: list[str] = []
     for p in parsed:
         for k in p:
             if k not in names:
                 names.append(k)
-    fields = []
-    for name in names:
-        dt = _infer_value_type([p[name] for p in parsed if name in p])
-        if not keep_untyped:
-            # resolve the NullType sentinel here; ``keep_untyped=True``
-            # hands the raw inference to a caller that needs to tell a
-            # sampled-but-all-null (sub)key apart from an unsampled one
-            # (the streaming path's nested deferral) and prunes itself
-            dt = prune_untyped(dt)
-        if dt is not None:  # all-null key: DEFER (see _infer_value_type)
-            fields.append(T.StructField(name, dt, True))
-    if keys is not None:
-        # sampled = the PRE-prune name set: a key seen in the sample but
-        # deferred (all null) must NOT fall into the string fallback —
-        # deferral is the point; the fallback is only for keys the sample
-        # never saw at all (their raw JSON text survives as string)
-        sampled = set(names)
-        fields += [
-            T.StructField(k, T.StringType(), True)
-            for k in keys
-            if k not in sampled
-        ]
+    fields = [
+        T.StructField(
+            name, _infer_value_type([p[name] for p in parsed if name in p]), True
+        )
+        for name in names
+    ]
+    # the string fallback is only for keys the sample never saw at all
+    # (their raw JSON text survives as string); a sampled all-null key
+    # keeps its NullType sentinel so the caller DEFERS it
+    sampled = set(names)
+    fields += [T.StructField(k, T.StringType(), True) for k in keys if k not in sampled]
     return T.StructType(fields)

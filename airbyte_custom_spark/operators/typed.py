@@ -10,9 +10,10 @@ Reference semantics:
      the sync continues (`BigQuerySqlGenerator.java:423-438,479`;
      `docs/understanding-airbyte/typing-deduping.md:14-33`).
   P5 CDC metadata injection (`DebeziumEventUtils.java:44-64`).
-  P7 StandardNameTransformer + collision suffixing
-     (`bases/base-java/.../StandardNameTransformer.java`,
-     `CatalogParser.java:98-131`).
+  P7 StandardNameTransformer (`bases/base-java/.../StandardNameTransformer
+     .java`); the collision suffixing (`CatalogParser.java:98-131`) is
+     applied by the JSON typing stage (`streaming/pipeline.py::
+     _resolve_and_evolve`).
 
 Everything is built-in column expressions — stays inside whole-stage
 codegen; no Python in the row path.
@@ -21,9 +22,10 @@ codegen; no Python in the row path.
 from __future__ import annotations
 
 import re
-from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, functions as F, types as T
+
+from airbyte_custom_spark.schema import PAYLOAD_COL
 
 
 def project_and_cast(
@@ -88,10 +90,9 @@ def project_and_cast(
 def extract_payload(
     events: DataFrame,
     target: T.StructType,
-    payload_col: str = "payload",
     key_map: dict[str, str] | None = None,
 ) -> DataFrame:
-    """Raw-JSON envelope → typed rows: parse ``payload_col`` once to a
+    """Raw-JSON envelope → typed rows: parse ``PAYLOAD_COL`` once to a
     string map (nested values arrive as raw JSON text), project every
     target field out of it, then apply ``project_and_cast`` (scalars via
     try_cast, complex fields via typed per-field from_json, per-row error
@@ -101,10 +102,10 @@ def extract_payload(
     the retype-from-raw rebuild (`lake/raw.py::retype_from_raw`)."""
     raw_of = {col: raw for raw, col in (key_map or {}).items()}
     pmap = F.from_json(
-        F.col(payload_col), T.MapType(T.StringType(), T.StringType())
+        F.col(PAYLOAD_COL), T.MapType(T.StringType(), T.StringType())
     )
     raw = events.select(
-        *[F.col(c) for c in events.columns if c != payload_col],
+        *[F.col(c) for c in events.columns if c != PAYLOAD_COL],
         *[
             pmap.getItem(raw_of.get(f.name, f.name)).alias(f.name)
             for f in target.fields
@@ -149,20 +150,3 @@ def normalize_name(name: str) -> str:
     if s and s[0].isdigit():
         s = "_" + s
     return s or "_"
-
-
-def normalize_columns(names: Sequence[str]) -> dict[str, str]:
-    """Map raw column names → normalized, resolving collisions by numeric
-    suffix like the reference (`CatalogParser.java:98-131`: `col`, `col_1`,
-    `col_2`, ...)."""
-    out: dict[str, str] = {}
-    seen: set[str] = set()
-    for raw in names:
-        base = normalize_name(raw)
-        candidate, i = base, 0
-        while candidate in seen:
-            i += 1
-            candidate = f"{base}_{i}"
-        seen.add(candidate)
-        out[raw] = candidate
-    return out

@@ -68,12 +68,15 @@ CDC_EVENT_SCHEMA = T.StructType(
 # `docs/understanding-airbyte/typing-deduping.md:5-70`).  Consumed by
 # `streaming.pipeline.JsonCdcIngestJob`, which runs the Arrow-vectorized
 # schema-inference + diff + in-place evolution + typed-cast stage per batch.
+# ``PAYLOAD_COL`` names that column for every JSON function and job.
+
+PAYLOAD_COL = "payload"
 
 JSON_CDC_EVENT_SCHEMA = T.StructType(
     [
         T.StructField("lsn", T.LongType(), False),
         T.StructField("op", T.StringType(), False),
-        T.StructField("payload", T.StringType(), True),
+        T.StructField(PAYLOAD_COL, T.StringType(), True),
         T.StructField("_ab_cdc_updated_at", T.TimestampType(), True),
         T.StructField("_ab_cdc_deleted_at", T.TimestampType(), True),
         T.StructField("source_partition", T.IntegerType(), True),

@@ -28,6 +28,8 @@ import time
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
+from airbyte_custom_spark.schema import PAYLOAD_COL
+
 # ---------------------------------------------------------------------------
 # 1. Scale generator (hash-arithmetic, JVM-side)
 # ---------------------------------------------------------------------------
@@ -126,7 +128,7 @@ def json_envelope(events_df: DataFrame) -> DataFrame:
                 "timestampFormat": "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX",
                 "timestampNTZFormat": "yyyy-MM-dd'T'HH:mm:ss.SSSSSS",
             },
-        ).alias("payload"),
+        ).alias(PAYLOAD_COL),
     )
 
 

@@ -299,11 +299,7 @@ class CdcIngestJob:
             # fused exact key discovery (attach_discovery): fold the tag
             # arrays into THIS aggregation — per-group key-combo sets
             # collapse map-side; no separate discovery job ever runs
-            aggs.append(
-                F.array_distinct(F.flatten(F.collect_set("_acs_keys"))).alias(
-                    "_keys"
-                )
-            )
+            aggs.append(_folded_tags().alias("_keys"))
         stats = (
             events.groupBy(
                 F.col("source_partition").alias("sp"),
@@ -497,17 +493,16 @@ class _JsonPayload:
     instead of three."""
 
     _event_schema = JSON_CDC_EVENT_SCHEMA
-    payload_col: str
 
     def _transform_batch(
         self, events: DataFrame, table: LakeTable, batch_id: int
     ) -> DataFrame:
-        return attach_discovery(events, table, self.payload_col)
+        return attach_discovery(events, table)
 
     def _post_discovery(
         self, raw_events: DataFrame, table: LakeTable, tags: list[str]
     ) -> DataFrame | None:
-        return evolve_from_tags(raw_events, table, tags, self.payload_col)
+        return evolve_from_tags(raw_events, table, tags)
 
 
 class JsonCdcIngestJob(_JsonPayload, CdcIngestJob):
@@ -546,16 +541,11 @@ class JsonCdcIngestJob(_JsonPayload, CdcIngestJob):
     applies idempotently.
     """
 
-    def __init__(
-        self,
-        *args,
-        payload_col: str = "payload",
-        raw_table_path: str | None = None,
-        raw_num_buckets: int = 8,
-        **kwargs,
-    ):
+    # bucket count of the raw envelope table
+    RAW_NUM_BUCKETS = 8
+
+    def __init__(self, *args, raw_table_path: str | None = None, **kwargs):
         super().__init__(*args, **kwargs)
-        self.payload_col = payload_col
         # optional raw-table retention (reference raw/final two-table
         # layout, `JavaBaseConstants.java:29-39`): every envelope row —
         # including the opaque payload text — is appended to an
@@ -563,7 +553,6 @@ class JsonCdcIngestJob(_JsonPayload, CdcIngestJob):
         # ever lose payload bytes and the final table can be rebuilt with
         # different types at any time (`lake/raw.py::retype_from_raw`)
         self.raw_table_path = raw_table_path
-        self.raw_num_buckets = raw_num_buckets
 
     def _raw_table(self) -> LakeTable:
         if LakeTable.exists(self.raw_table_path):
@@ -579,7 +568,7 @@ class JsonCdcIngestJob(_JsonPayload, CdcIngestJob):
             self.raw_table_path,
             env,
             primary_key=("source_partition",),
-            num_buckets=self.raw_num_buckets,
+            num_buckets=self.RAW_NUM_BUCKETS,
             # engine-owned envelope table: stores the CDC 'op' verbatim as
             # a payload column (append-only — never merged/delete_where'd,
             # so the reserved-name hazards don't apply)
@@ -602,34 +591,22 @@ class JsonCdcIngestJob(_JsonPayload, CdcIngestJob):
         return super()._transform_batch(events, table, batch_id)
 
 
-def infer_evolve_extract(
-    events: DataFrame, table: LakeTable, payload_col: str = "payload"
-) -> DataFrame:
-    """The JSON typing stage as ONE call (used by `retype_from_raw`):
-    exact key discovery → nested-aware inference → in-place evolution →
-    typed extraction with per-row error capture.  The ingest jobs instead
-    FUSE the discovery into the batch's stats aggregation
-    (`attach_discovery` + `evolve_from_tags`) — one fewer payload parse
-    per batch."""
-    from airbyte_custom_spark.operators.schema_evo import (
-        discover_payload_keys,
-        widen_probes_for,
-    )
-    from airbyte_custom_spark.operators.typed import extract_payload
+def infer_evolve_extract(events: DataFrame, table: LakeTable) -> DataFrame:
+    """The ingest's JSON typing stage as ONE call, for a frame that is not
+    a micro-batch (`lake/raw.py::retype_from_raw`): `attach_discovery`,
+    one aggregation of the tag column, then `evolve_from_tags` — the same
+    exact discovery, P7 naming and in-place evolution every batch of the
+    JSON jobs runs, so a table typed here matches one the stream typed.
+    The jobs fold the tags into their stats aggregation instead."""
+    tagged = attach_discovery(events, table)
+    tags = tagged.agg(_folded_tags()).first()[0]
+    rebuilt = evolve_from_tags(events, table, tags or [])
+    return tagged.drop("_acs_keys") if rebuilt is None else rebuilt
 
-    key_map = table.payload_key_map
-    raw_of = {col: raw for raw, col in key_map.items()}
-    keys, nested_keys_raw, widen = discover_payload_keys(
-        events,
-        payload_col,
-        [raw_of.get(c, c) for c in _struct_cols(table)],
-        widen_probes_for(_payload_target(table), raw_of),
-    )
-    full_map = _resolve_and_evolve(
-        table, keys, nested_keys_raw, events, payload_col, widen=widen
-    )
-    target = _payload_target(table)
-    return extract_payload(events, target, payload_col, key_map=full_map)
+
+def _folded_tags() -> F.Column:
+    """The batch's distinct discovery tags, folded from ``_acs_keys``."""
+    return F.array_distinct(F.flatten(F.collect_set("_acs_keys")))
 
 
 def _struct_cols(table: LakeTable) -> list[str]:
@@ -647,9 +624,7 @@ def _payload_target(table: LakeTable):
     )
 
 
-def attach_discovery(
-    events: DataFrame, table: LakeTable, payload_col: str = "payload"
-) -> DataFrame:
+def attach_discovery(events: DataFrame, table: LakeTable) -> DataFrame:
     """Typed extraction under the table's CURRENT schema plus a hidden
     ``_acs_keys`` tag column — the batch's exact key set then folds into
     the stats aggregation for free (`tagged_key_expr`), and
@@ -667,21 +642,16 @@ def attach_discovery(
     with_tags = events.withColumn(
         "_acs_keys",
         tagged_key_expr(
-            payload_col,
             [raw_of.get(c, c) for c in _struct_cols(table)],
             widen_probes_for(_payload_target(table), raw_of),
         ),
     )
     # extract_payload passes non-target columns through — _acs_keys rides
-    return extract_payload(with_tags, _payload_target(table), payload_col,
-                           key_map=key_map)
+    return extract_payload(with_tags, _payload_target(table), key_map=key_map)
 
 
 def evolve_from_tags(
-    raw_events: DataFrame,
-    table: LakeTable,
-    tags: list[str],
-    payload_col: str = "payload",
+    raw_events: DataFrame, table: LakeTable, tags: list[str]
 ) -> DataFrame | None:
     """Post-stats half of the fused discovery: decode the tag set the
     stats agg collected, run normalization + evolution, and return a
@@ -694,13 +664,11 @@ def evolve_from_tags(
     keys, nested_keys_raw, widen = decode_discovery_tags(tags)
     v0 = table.version
     full_map = _resolve_and_evolve(
-        table, keys, nested_keys_raw, raw_events, payload_col, widen=widen
+        table, keys, nested_keys_raw, raw_events, widen=widen
     )
     if table.version == v0:
         return None
-    return extract_payload(
-        raw_events, _payload_target(table), payload_col, key_map=full_map
-    )
+    return extract_payload(raw_events, _payload_target(table), key_map=full_map)
 
 
 def _resolve_and_evolve(
@@ -708,7 +676,6 @@ def _resolve_and_evolve(
     keys: list[str],
     nested_keys_raw: dict[str, list[str]],
     events: DataFrame,
-    payload_col: str,
     widen: dict[str, str] | None = None,
 ) -> dict[str, str]:
     """Normalization + nested-aware inference + in-place evolution, given
@@ -728,7 +695,7 @@ def _resolve_and_evolve(
         evolve_table_for,
         infer_payload_schema,
     )
-    from airbyte_custom_spark.operators.typed import extract_payload, normalize_name
+    from airbyte_custom_spark.operators.typed import normalize_name
     from airbyte_custom_spark.schema import is_widening, merge_nested
 
     if widen:
@@ -850,13 +817,11 @@ def _resolve_and_evolve(
     if new_keys or nested_new or nested_arrays:
         from airbyte_custom_spark.operators.schema_evo import prune_untyped
 
-        # keep_untyped: the raw inference distinguishes a
-        # sampled-but-all-null (sub)key (NullType sentinel — DEFER it)
-        # from one the sample never saw (string fallback); pruning
-        # happens below, after that decision
-        inferred = infer_payload_schema(
-            events, payload_col, keys=keys, keep_untyped=True
-        )
+        # the raw inference distinguishes a sampled-but-all-null
+        # (sub)key (NullType sentinel — DEFER it) from one the sample
+        # never saw (string fallback); pruning happens below, after that
+        # decision
+        inferred = infer_payload_schema(events, keys)
         # inference is keyed by RAW field name — re-key by column
         inf = {col_of(f.name): f.dataType for f in inferred.fields}
         merged_fields: list[T.StructField] = []
@@ -959,10 +924,6 @@ class JsonGlobalStateIngestJob(_JsonPayload, GlobalStateIngestJob):
     new column in one stream never touches another's schema — then
     merges under the same global batch_id; exactly-once per stream via
     per-stream manifests, exactly like the typed parent."""
-
-    def __init__(self, *args, payload_col: str = "payload", **kwargs):
-        super().__init__(*args, **kwargs)
-        self.payload_col = payload_col
 
 
 def backfill(

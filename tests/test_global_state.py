@@ -427,19 +427,19 @@ def test_crash_inside_thread_pool_is_exactly_once(spark, tmp_path, monkeypatch):
 
 
 def test_json_global_discovery_is_fused_no_per_stream_jobs(spark, tmp_path, monkeypatch):
-    """The JSON variant's payload-key discovery rides the ONE global
-    stats aggregation (stream-switched tag expression): the standalone
-    per-slice discovery path must never run."""
+    """The JSON variant's payload-key discovery rides each slice's stats
+    aggregation: the one-call typing stage, with its own discovery
+    aggregation, must never run on the streaming path."""
     import json as _json
 
-    import airbyte_custom_spark.operators.schema_evo as se
+    import airbyte_custom_spark.streaming.pipeline as pipeline
     from airbyte_custom_spark.streaming.pipeline import JsonGlobalStateIngestJob
     from pyspark.sql import types as T
 
     def boom(*a, **kw):
-        raise AssertionError("per-slice discover_payload_keys ran")
+        raise AssertionError("per-slice infer_evolve_extract ran")
 
-    monkeypatch.setattr(se, "discover_payload_keys", boom)
+    monkeypatch.setattr(pipeline, "infer_evolve_extract", boom)
 
     rows = []
     for i in range(200):

@@ -9,17 +9,19 @@ input is either typed out or captured in `_meta.errors` (the P3/P4
 import json
 import random
 
-from pyspark.sql import functions as F
+from pyspark.sql import functions as F, types as T
 
 from airbyte_custom_spark.operators.schema_evo import (
     infer_payload_schema,
-    payload_keys,
+    prune_untyped,
 )
 from airbyte_custom_spark.operators.typed import extract_payload
 
+from tests.util import discover_keys
+
 KEY_POOL = [f"k{i}" for i in range(8)]
 SAMPLE_ROWS = 16  # tiny on purpose: rows beyond it exercise the
-# exact-key-discovery fallback (type from sample, SET from payload_keys)
+# exact-key-discovery fallback (type from sample, SET from the key tags)
 
 
 def _value(rng: random.Random, kind: str, allow_null: bool):
@@ -65,9 +67,13 @@ def test_fuzzed_payloads_lose_nothing(spark):
     for seed in range(6):
         rows = _corpus(seed)
         df = spark.createDataFrame(rows, "id long, payload string")
-        keys = payload_keys(df, "payload")
-        schema = infer_payload_schema(
-            df, "payload", sample_rows=SAMPLE_ROWS, keys=keys
+        keys = discover_keys(df)[0]
+        inferred = infer_payload_schema(df, keys, sample_rows=SAMPLE_ROWS)
+        # resolve the no-evidence sentinel the way the typing stage does
+        # (an array seen only empty → array<string>)
+        schema = T.StructType(
+            [T.StructField(f.name, prune_untyped(f.dataType), True)
+             for f in inferred.fields]
         )
         # (1) exact field set: every key ever present, nothing else
         seen = set()

@@ -16,7 +16,7 @@ from airbyte_custom_spark.sources.generator import (
 )
 from airbyte_custom_spark.streaming.pipeline import JsonCdcIngestJob
 
-from tests.util import assert_matches_replay
+from tests.util import assert_matches_replay, discover_keys
 
 
 def test_json_ingest_matches_typed_replay(spark, tmp_path):
@@ -201,8 +201,8 @@ def test_json_ingest_malformed_nested_captured_per_row(spark, tmp_path):
     assert any("tags" in e for e in got[1]["_meta"]["errors"])
 
 
-def test_payload_keys_exact_and_nested_inference_units(spark):
-    """Unit coverage: payload_keys sees keys with null values and nested
+def test_discovery_tags_exact_and_nested_inference_units(spark):
+    """Unit coverage: key discovery sees keys with null values and nested
     payloads; _infer_value_type recurses arrays-of-structs and applies the
     Union → string fallback."""
     from pyspark.sql import types as T
@@ -210,14 +210,13 @@ def test_payload_keys_exact_and_nested_inference_units(spark):
     from airbyte_custom_spark.operators.schema_evo import (
         _infer_value_type,
         infer_payload_schema,
-        payload_keys,
     )
 
     df = spark.createDataFrame(
         [('{"a": 1, "b": null, "c": {"x": [1]}}',), ('{"a": 2, "d": [true]}',)],
         "payload string",
     )
-    assert payload_keys(df, "payload") == ["a", "b", "c", "d"]
+    assert discover_keys(df)[0] == ["a", "b", "c", "d"]
     t = _infer_value_type([[{"u": 1}], [{"u": 2, "v": "s"}]])
     assert t == T.ArrayType(
         T.StructType(
@@ -228,7 +227,7 @@ def test_payload_keys_exact_and_nested_inference_units(spark):
     assert _infer_value_type([1, 2.5]) == T.DoubleType()
     assert _infer_value_type([True, False]) == T.BooleanType()
     # keys= makes the field SET exact even when the sample misses a key
-    sch = infer_payload_schema(df, "payload", keys=["a", "b", "c", "d", "zz"])
+    sch = infer_payload_schema(df, ["a", "b", "c", "d", "zz"])
     assert [f.name for f in sch.fields if f.name == "zz"] == ["zz"]
     assert dict((f.name, f.dataType) for f in sch.fields)["zz"] == T.StringType()
 
@@ -325,21 +324,19 @@ def test_recursive_widening_and_merge_units():
     assert merge_nested(s_a, Str) == s_a
 
 
-def test_discover_payload_keys_fused(spark):
-    from airbyte_custom_spark.operators.schema_evo import discover_payload_keys
-
+def test_discovery_tags_fused(spark):
     df = spark.createDataFrame(
         [('{"a": 1, "m": {"x": 1}}',), ('{"b": 2, "m": {"y": [1]}, "n": {"z": 0}}',)],
         "payload string",
     )
-    top, nested, widen = discover_payload_keys(df, "payload", ["m", "n"])
+    top, nested, widen = discover_keys(df, ["m", "n"])
     assert top == ["a", "b", "m", "n"]
     assert nested == {"m": ["x", "y"], "n": ["z"]}
     assert widen == {}
     # struct column absent from a row / non-object value: no phantom keys
-    top2, nested2, _ = discover_payload_keys(df, "payload", ["a"])
+    top2, nested2, _ = discover_keys(df, ["a"])
     assert nested2 == {}
-    # exact widen demands ride the same aggregate: a long-committed column
+    # exact widen demands ride the same tags: a long-committed column
     # seeing a decimal value demands double; int seeing past-int32 demands
     # long; garbage demands NOTHING (stays a per-row cast error)
     df2 = spark.createDataFrame(
@@ -351,7 +348,7 @@ def test_discover_payload_keys_fused(spark):
         ("b", None, "b", "integer"),
         ("c", None, "c", "long"),
     ]
-    _, _, widen2 = discover_payload_keys(df2, "payload", widen_probes=probes)
+    _, _, widen2 = discover_keys(df2, widen_probes=probes)
     assert widen2 == {"a": "double", "b": "long"}
     # nested probes reach one level into struct-typed columns: path_key
     # is col<SEP>sub, value parsed out of the nested JSON text
@@ -365,7 +362,7 @@ def test_discover_payload_keys_fused(spark):
         ("m", "x", "m" + TAG_SEP + "x", "long"),
         ("m", "y", "m" + TAG_SEP + "y", "long"),
     ]
-    _, _, widen3 = discover_payload_keys(df3, "payload", widen_probes=nprobes)
+    _, _, widen3 = discover_keys(df3, widen_probes=nprobes)
     assert widen3 == {"m" + TAG_SEP + "x": "double"}
 
 
@@ -472,8 +469,10 @@ def test_json_ingest_normalizes_unsafe_payload_keys_stably(spark, tmp_path):
 
 
 def test_retype_from_raw_normalizes_keys(spark, tmp_path):
-    """retype_from_raw re-derives the schema over full history with the
-    same P7 normalization (deterministic: sorted key set)."""
+    """retype_from_raw re-derives the schema over full history through the
+    live ingest's own typing stage, so for a single-batch history the
+    rebuilt key map and rows equal the live table's: raw "a_b" keeps its
+    own name and "a.b" suffixes past it, in both tables."""
     import json as _json
 
     from airbyte_custom_spark.lake.raw import retype_from_raw
@@ -493,12 +492,18 @@ def test_retype_from_raw_normalizes_keys(spark, tmp_path):
     rebuilt = retype_from_raw(
         LakeTable.load(spark, raw_path), str(tmp_path / "rb"), num_buckets=2
     )
-    # sorted keys: "a.b" < "a_b" lexically?  '.' (46) < '_' (95) → "a.b"
-    # normalizes first and claims a_b; "a_b" exact-keeps... "a_b" is free
-    # only if unclaimed — here "a.b" took it, so raw a_b → a_b_1
-    assert rebuilt.payload_key_map["a.b"] == "a_b"
+    live = LakeTable.load(spark, t.path)
+    assert live.payload_key_map == {"a.b": "a_b_1"}
+    assert rebuilt.payload_key_map == live.payload_key_map
+    cols = rebuilt.payload_columns
+    assert set(cols) <= set(live.payload_columns)
+
+    def rows(table):
+        return sorted(tuple(r[c] for c in cols) for r in table.read().collect())
+
+    assert rows(rebuilt) == rows(live)
     row = rebuilt.read().first()
-    assert row["a_b"] == "v1" and row["a_b_1"] == "v2"
+    assert row["a_b"] == "v2" and row["a_b_1"] == "v1"
 
 
 def test_json_ingest_meta_column_name_collision_is_suffixed(spark, tmp_path):
@@ -584,7 +589,7 @@ def test_all_null_new_key_defers_type_until_evidence(spark, tmp_path):
         (1, "c", _json.dumps({"conv_id": "a", "turn_idx": 0, "role": "user",
                               "text": "x", "k": None, "e": []})),
     ])
-    t.merge(infer_evolve_extract(b1, t, "payload"), batch_id=0)
+    t.merge(infer_evolve_extract(b1, t), batch_id=0)
     assert "k" not in t.payload_columns  # deferred: no evidence yet
     assert dict(t.read().dtypes)["e"] == "array<string>"
 
@@ -592,7 +597,7 @@ def test_all_null_new_key_defers_type_until_evidence(spark, tmp_path):
         (2, "u", _json.dumps({"conv_id": "a", "turn_idx": 1, "role": "user",
                               "text": "y", "k": 7})),
     ])
-    t.merge(infer_evolve_extract(b2, t, "payload"), batch_id=1)
+    t.merge(infer_evolve_extract(b2, t), batch_id=1)
     fields = {f.name: f.dataType for f in t.schema().fields}
     assert isinstance(fields["k"], T.LongType)  # typed from real evidence
     vals = {r["turn_idx"]: r["k"] for r in t.read().collect()}
@@ -627,10 +632,10 @@ def test_all_null_nested_subkey_defers_until_evidence(spark, tmp_path):
         return _json.dumps({"conv_id": "a", "turn_idx": i, "role": "user",
                             "text": f"t{i}", "meta": meta})
 
-    t.merge(infer_evolve_extract(env([(1, "c", payload(0, {"a": 1}))]), t,
-                                 "payload"), batch_id=0)
+    t.merge(infer_evolve_extract(env([(1, "c", payload(0, {"a": 1}))]), t),
+            batch_id=0)
     t.merge(infer_evolve_extract(env([(2, "c", payload(1, {"a": 2, "b": None}))]),
-                                 t, "payload"), batch_id=1)
+                                 t), batch_id=1)
 
     def meta_fields():
         (mf,) = [f for f in t.schema().fields if f.name == "meta"]
@@ -638,8 +643,8 @@ def test_all_null_nested_subkey_defers_until_evidence(spark, tmp_path):
 
     assert set(meta_fields()) == {"a"}  # b deferred: all-null so far
 
-    t.merge(infer_evolve_extract(env([(3, "c", payload(2, {"b": 5}))]), t,
-                                 "payload"), batch_id=2)
+    t.merge(infer_evolve_extract(env([(3, "c", payload(2, {"b": 5}))]), t),
+            batch_id=2)
     fields = meta_fields()
     assert isinstance(fields["b"], T.LongType), fields  # typed from evidence
     vals = {r["turn_idx"]: (r["meta"]["a"] if r["meta"] else None,

@@ -200,7 +200,7 @@ def test_json_ingest_any_payload_shape_matches_replay(
     lo = 0
     for bi, hi in enumerate(bounds):
         chunk = env.filter((F.col("lsn") > lo) & (F.col("lsn") <= hi))
-        typed = infer_evolve_extract(chunk, t, "payload")
+        typed = infer_evolve_extract(chunk, t)
         t.merge(typed, batch_id=bi)
         lo = hi
 

@@ -3,7 +3,7 @@ normalization (P7)."""
 
 from pyspark.sql import types as T
 
-from airbyte_custom_spark.operators.typed import normalize_columns, normalize_name
+from airbyte_custom_spark.operators.typed import normalize_name
 from airbyte_custom_spark.schema import airbyte_to_spark, catalog_to_struct
 
 
@@ -67,8 +67,23 @@ def test_normalize_name():
     assert normalize_name("ok_name") == "ok_name"
 
 
-def test_normalize_collisions():
-    got = normalize_columns(["Col A", "col_a", "col a"])
-    assert got["Col A"] == "col_a"
-    assert got["col_a"] == "col_a_1"
-    assert got["col a"] == "col_a_2"
+def test_normalize_collisions(spark, tmp_path):
+    """Three raw keys normalizing to one name, typed on an empty table by
+    the JSON typing stage: the normalization-stable raw keeps the name,
+    the others suffix in sorted order."""
+    import json
+
+    from airbyte_custom_spark.lake.table import LakeTable
+    from airbyte_custom_spark.streaming.pipeline import infer_evolve_extract
+
+    payload = json.dumps({"id": 1, "Col A": "x", "col_a": "y", "col a": "z"})
+    events = spark.createDataFrame(
+        [(1, "c", payload)], "lsn long, op string, payload string"
+    )
+    t = LakeTable.create(
+        spark, str(tmp_path / "tbl"), T.StructType([]), primary_key=("id",),
+        num_buckets=1,
+    )
+    row = infer_evolve_extract(events, t).first()
+    assert t.payload_key_map == {"Col A": "col_a_1", "col a": "col_a_2"}
+    assert (row["col_a"], row["col_a_1"], row["col_a_2"]) == ("y", "x", "z")

@@ -157,7 +157,9 @@ def test_infer_payload_schema(spark):
         ],
         "payload string",
     )
-    st = infer_payload_schema(df, "payload")
+    st = infer_payload_schema(
+        df, ["conv_id", "turn_idx", "score", "flag", "tags", "extra"]
+    )
     assert st["conv_id"].dataType == T.StringType()
     assert st["turn_idx"].dataType == T.LongType()
     assert st["score"].dataType == T.DoubleType()

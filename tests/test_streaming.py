@@ -69,6 +69,14 @@ def test_pk_violations_ignore_policy(spark, tmp_path):
     assert_matches_replay(t.read(), poisoned.filter("conv_id IS NOT NULL"))
 
 
+def test_pk_violations_rejects_unknown_policy():
+    """A misspelled policy must fail when the config is built, not drop
+    NULL-pk rows as if it were "ignore"."""
+    with pytest.raises(ValueError, match="pk_violations"):
+        IngestConfig(pk_violations="fial")
+    assert IngestConfig().pk_violations == "fail"
+
+
 def test_resume_from_checkpoint_no_loss_no_dup(spark, env):
     """Kill between micro-batches, restart from checkpoint: final state
     identical to an uninterrupted run."""

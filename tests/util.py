@@ -69,3 +69,22 @@ def assert_matches_replay(final_df: DataFrame, events_df: DataFrame) -> None:
         f"mismatch: {len(got)} rows vs {len(expected)} expected; "
         f"extra={set(got) - set(expected)} missing={set(expected) - set(got)}"
     )
+
+
+def discover_keys(df: DataFrame, struct_cols=None, widen_probes=None):
+    """The JSON jobs' payload-key discovery over a frame with a ``payload``
+    column: per-row tags (``tagged_key_expr``) folded in one aggregation,
+    then decoded — (top-level keys, {struct col → subkeys}, widen tags)."""
+    from pyspark.sql import functions as F
+
+    from airbyte_custom_spark.operators.schema_evo import (
+        decode_discovery_tags,
+        tagged_key_expr,
+    )
+
+    tags = df.agg(
+        F.array_distinct(
+            F.flatten(F.collect_set(tagged_key_expr(struct_cols, widen_probes)))
+        )
+    ).first()[0]
+    return decode_discovery_tags(tags or [])
